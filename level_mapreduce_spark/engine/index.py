@@ -65,6 +65,9 @@ _TOMBSTONES = "tombstones"
 # only at lease depth 1 (a reentrant fold inside delete_range may
 # still have live readers on it; ADVICE r11 high).
 _SCRATCH = "_scratch"
+# compact()'s commit journal, a sidecar beside segments/ (see
+# MapIndex._recover_fold)
+_FOLD_INTENT = "fold.json"
 
 # LSM maintenance thresholds (100 TB guard rails): past either, update()
 # folds epochs back to one — unbounded epoch/tombstone growth is the
@@ -217,12 +220,13 @@ class ConcurrentWriterError(RuntimeError):
 def _writer(method):
     """Guard a mutating MapIndex method with the writer lease.
 
-    The crash-recovery swap (:meth:`MapIndex._recover_swap`) is correct
-    only single-writer: two concurrent handles interleaving
-    build/update/compact can silently interleave directory swaps. The
-    lease turns that into a LOUD :class:`ConcurrentWriterError` on the
-    second writer. Reentrant (update() -> auto compact()) via a depth
-    counter."""
+    Only the lease holder changes storage: segment and tombstone
+    writes, the fold commit and its roll-forward
+    (:meth:`MapIndex._recover_fold`) are correct only single-writer —
+    two handles interleaving build/update/compact could interleave
+    deletes and renames of the same epoch dirs. The lease turns that
+    into a LOUD :class:`ConcurrentWriterError` on the second writer.
+    Reentrant (update() -> auto compact()) via a depth counter."""
 
     @functools.wraps(method)
     def wrapper(self, *args, **kwargs):
@@ -299,9 +303,8 @@ class MapIndex:
         # compaction trigger's cache. Epoch dirs are immutable BETWEEN
         # folds, so update() only ever pays a walk of its own new
         # epoch; paths that rewrite or renumber epoch contents in
-        # place (build() rebuild, compact() full/partial, fold/swap
-        # recovery, drop) clear the whole dict, and vanished epochs
-        # are pruned at read time.
+        # place (build() rebuild, the fold commit, drop) clear the
+        # whole dict, and vanished epochs are pruned at read time.
         self._seg_bytes_by_epoch: dict[int, int] = {}
         # writer lease state (see _acquire_lease): per-HANDLE identity
         # + reentrancy depth for update() -> auto compact()
@@ -338,7 +341,7 @@ class MapIndex:
         processes at scale). Goes through the Hadoop FS API so it works
         on HDFS/object stores, and create-then-rename so readers never
         see a torn file. Sidecars sit beside ``segments/`` and survive
-        :meth:`compact`'s directory swap untouched."""
+        every :meth:`compact` fold untouched."""
         path = posixpath.join(self.root, name)
         fs, hpath, jvm = _hadoop_fs(self.spark, path)
         payload = json.dumps(obj).encode("utf-8")
@@ -1288,7 +1291,7 @@ class MapIndex:
         :meth:`delete_range` stages its self-referential key set to a
         scratch file for exactly this reason.
         """
-        self._recover_swap()
+        self._recover_fold()
         epoch = self._next_epoch()
         changes = self._normalize_changes(changes, assume_unique=assume_unique)
 
@@ -1523,7 +1526,7 @@ class MapIndex:
         tests/test_durability.py::
         test_delete_range_survives_reentrant_auto_fold).
         """
-        self._recover_swap()
+        self._recover_fold()
         scratch = posixpath.join(self.root, _SCRATCH, "delrange_keys")
         try:
             (
@@ -1618,6 +1621,26 @@ class MapIndex:
         across its API, index.js:113) — this falls out of the epoch
         design for free.
 
+        Reads never change storage: a fold commit left in flight is
+        served as its post-fold view and finished by the next writer
+        (see :meth:`_live`).
+        """
+        return self._live(hi=as_of_epoch)
+
+    def _live(self, lo: int | None = None, hi: int | None = None) -> DataFrame:
+        """The one liveness rule: rows of the segment epochs in
+        ``[lo, hi]`` that survive every tombstone at or below ``hi`` —
+        a row dies iff ``row.epoch < max tomb_epoch <= hi`` for its
+        doc (the per-doc max makes duplicate and superseded markers
+        inert). :meth:`read` is ``_live(hi=as_of_epoch)``; a fold of
+        ``[lo, hi]`` writes ``_live(lo, hi)`` at its target epoch.
+
+        Segments come from the committed view. While a fold commit is
+        in flight (journal AND ``.fold_tmp`` present) that is every
+        ``epoch=`` dir outside the journal's ``fold_epochs`` plus the
+        folded copy read at ``fold_max`` — correct however many of the
+        commit's deletes have landed, and the reader touches nothing.
+
         The tombstone side is normally tiny relative to the index (one
         row per ever-changed doc since last compact), so it broadcasts
         and the anti-join never shuffles the index itself. If churn has
@@ -1625,38 +1648,25 @@ class MapIndex:
         metadata, no job) the hint is dropped and AQE picks the join
         strategy — correct either way, never OOMs the driver.
         """
-        # read path: recovery without cleanup — a .compacting seen
-        # alongside live segments may be a LIVE writer's copy
-        self._recover_swap(cleanup=False)
-        if not _list_epochs(self.spark, self.segments_path):
+        segs = self._segments()
+        if segs is None:
             return self.spark.createDataFrame([], self._storage_schema).drop(
                 "epoch"
             )
-        # explicit schemas: the storage layout is engine-owned, so
-        # schema inference (a driver-side footer read per
-        # construction, ~100 ms locally, a remote GET on object
-        # stores) buys nothing — serve paths construct several reads
-        # per query and the tax was the dominant serve cost in the
-        # r15 profile
-        segs = self.spark.read.schema(self._storage_schema).parquet(
-            self.segments_path
-        )
-        if as_of_epoch is not None:
-            segs = segs.where(F.col("epoch") <= as_of_epoch)
+        if lo is not None:
+            segs = segs.where(F.col("epoch") >= lo)
+        if hi is not None:
+            segs = segs.where(F.col("epoch") <= hi)
         tomb_epochs = _list_epochs(self.spark, self.tombstones_path)
-        if as_of_epoch is not None:
-            tomb_epochs = [e for e in tomb_epochs if e <= as_of_epoch]
+        if hi is not None:
+            tomb_epochs = [e for e in tomb_epochs if e <= hi]
         if not tomb_epochs:
             return segs.drop("epoch")
         tombs = (
             self.spark.read.schema(self._tombstone_schema).parquet(
                 self.tombstones_path
             )
-            .where(
-                F.col("epoch") <= as_of_epoch
-                if as_of_epoch is not None
-                else F.lit(True)
-            )
+            .where(F.col("epoch") <= hi if hi is not None else F.lit(True))
             .groupBy(DOC_KEY)
             .agg(F.max("epoch").alias("tomb_epoch"))
         )
@@ -1672,6 +1682,45 @@ class MapIndex:
             "left_anti",
         )
         return live.drop("epoch")
+
+    def _segments(self) -> DataFrame | None:
+        """Segment rows (with ``epoch``) of the committed view, or None
+        when there are none. Explicit schemas: the storage layout is
+        engine-owned, so schema inference (a driver-side footer read
+        per construction, ~100 ms locally, a remote GET on object
+        stores) buys nothing — serve paths construct several reads per
+        query and the tax was the dominant serve cost in the r15
+        profile."""
+        epochs = _list_epochs(self.spark, self.segments_path)
+        intent = self.get_sidecar(name=_FOLD_INTENT)
+        if intent is not None:
+            fs, tmp, _ = _hadoop_fs(self.spark, self._fold_tmp_path)
+            if not fs.exists(tmp):
+                intent = None  # renamed in: the listing is post-fold
+        if intent is None:
+            if not epochs:
+                return None
+            return self.spark.read.schema(self._storage_schema).parquet(
+                self.segments_path
+            )
+        folded = [int(e) for e in intent["fold_epochs"]]
+        view = (
+            self.spark.read.schema(
+                T.StructType(
+                    [f for f in self._storage_schema if f.name != "epoch"]
+                )
+            )
+            .parquet(self._fold_tmp_path)
+            .withColumn("epoch", F.lit(int(intent["fold_max"])))
+        )
+        if any(e not in folded for e in epochs):
+            rest = (
+                self.spark.read.schema(self._storage_schema)
+                .parquet(self.segments_path)
+                .where(~F.col("epoch").isin(folded))
+            )
+            view = rest.unionByName(view)
+        return view
 
     def scan(
         self,
@@ -1884,131 +1933,58 @@ class MapIndex:
 
     # ---------------------------------------------------------- compaction
 
-    def _recover_swap(self, cleanup: bool = True) -> None:
-        """Roll an interrupted :meth:`compact` swap forward or back.
-
-        Between ``rename(segments -> .old)`` and
-        ``rename(.compacting -> segments)`` the segments dir does not
-        exist; without recovery a crash there makes ``read()`` silently
-        return an empty index. Called at every entry that touches
-        segments (read/update/compact). Rules:
-
-        - segments present + ``cleanup`` (write paths, WRITER LEASE
-          HELD): any ``.compacting``/``.old`` leftovers are dead
-          (aborted write / completed swap) — delete them. Read paths
-          pass ``cleanup=False`` and DO NOT delete: a reader is not
-          lease-synchronized, so a ``.compacting`` it sees alongside
-          live segments may be a LIVE writer's in-progress copy —
-          deleting it would hand the writer's unchecked rename chain an
-          empty source and destroy the index.
-        - segments missing + ``.compacting`` present: the compacted
-          copy is complete by construction (it is only ever renamed
-          after a successful write) — roll FORWARD: rename it in.
-          (Safe from the read path too: a live writer is BETWEEN its
-          two renames here, and its own rename-in then no-ops — see
-          compact()'s tolerated-rename note.)
-        - segments missing + only ``.old``: roll BACK to the pre-swap
-          copy.
-
-        Tombstones are never touched: stale ones are harmless after a
-        rolled-forward compact (compacted epoch = max epoch, so
-        ``epoch < tomb_epoch`` never holds), and newer ones written by
-        a post-crash update must survive.
-        """
-        fs, seg_path, jvm = _hadoop_fs(self.spark, self.segments_path)
-        P = jvm.org.apache.hadoop.fs.Path
-        tmp = P(self.segments_path + ".compacting")
-        old = P(self.segments_path + ".old")
-        has_tmp, has_old = fs.exists(tmp), fs.exists(old)
-        if not (has_tmp or has_old):
-            self._recover_fold(cleanup)
-            return
-        if fs.exists(seg_path):
-            if cleanup:
-                if has_tmp:
-                    fs.delete(tmp, True)
-                if has_old:
-                    fs.delete(old, True)
-            self._recover_fold(cleanup)
-            return
-        if has_tmp:
-            fs.rename(tmp, seg_path)
-            if has_old and cleanup:
-                fs.delete(old, True)
-        elif has_old:
-            fs.rename(old, seg_path)
-        self._tomb_bytes_cache = None
-        self._seg_bytes_by_epoch.clear()
-        # fold recovery AFTER the swap recovery: it renames into the
-        # (now restored) segments dir
-        self._recover_fold(cleanup)
-
-    # ------------------------------------------------- partial compaction
-
     @property
     def _fold_tmp_path(self) -> str:
         # dot-prefixed so Spark's file index hides it from every read
         # of segments/ while the folded copy is being written
         return posixpath.join(self.segments_path, ".fold_tmp")
 
-    @property
-    def _fold_intent_name(self) -> str:
-        return "fold.json"
+    def _recover_fold(self) -> None:
+        """Finish, or clean up after, a :meth:`compact` commit.
+        Writer-only: called at every write-path entry with the lease
+        held, and as the commit step of compact() itself.
 
-    def _recover_fold(self, cleanup: bool = True) -> None:
-        """Roll an interrupted partial :meth:`compact` commit forward.
-
-        The partial-fold commit is journaled: ``fold.json`` (atomic
-        tmp+rename write) records the folded epoch list and target
-        epoch BEFORE any live directory is touched, and the folded
-        copy under ``segments/.fold_tmp`` is complete by construction
-        when the journal exists (the journal is written only after the
-        fold write succeeds). States:
+        The fold commit is journaled: ``fold.json`` (atomic tmp+rename
+        write) records the folded epoch list and the target epoch
+        BEFORE any live directory is touched, and the folded copy
+        under ``segments/.fold_tmp`` is complete by construction when
+        the journal exists (the journal is written only after the fold
+        write succeeds). States:
 
         - no journal: nothing in flight. A stray ``.fold_tmp`` is a
-          pre-commit abort — invisible to readers (dot-dir); write
-          paths (``cleanup=True``, lease held) delete it.
-        - journal + ``.fold_tmp``: crash during the commit (between
-          journal write and the rename). Roll FORWARD: delete any
-          remaining folded epoch dirs, rename the tmp in as
-          ``epoch={fold_max}``, drop the journal. Safe from the read
-          path too (precedent: _recover_swap's read-path roll-forward)
-          — racing recoverers' deletes are idempotent and the rename
-          is tolerated-failed when the destination already exists.
+          pre-commit abort (invisible to readers, a dot-dir) — delete
+          it, with any staging dir a crashed compact_tombstones()
+          left (its protocol needs no journal).
+        - journal + ``.fold_tmp``: the commit is running or crashed
+          mid-way. Delete the remaining folded epoch dirs, rename the
+          tmp in as ``epoch={fold_max}``, drop the journal.
         - journal, no ``.fold_tmp``: the rename happened (deletes
-          strictly precede it), or a full build/compact overwrote the
-          segment dir and superseded the fold — either way the journal
-          is stale cleanup; drop it and sweep dead tombstones.
+          strictly precede it), or a build() overwrite superseded the
+          fold — drop the journal.
+
+        Both journal states end with the dead-tombstone sweep, which
+        after a full fold reclaims every tombstone.
         """
-        intent = self.get_sidecar(name=self._fold_intent_name)
+        intent = self.get_sidecar(name=_FOLD_INTENT)
         if intent is None:
-            if cleanup:
-                _delete_path(self.spark, self._fold_tmp_path)
-                # a crashed compact_tombstones() leaves only this
-                # staging dir (its protocol needs no journal)
-                _delete_path(
-                    self.spark, self.tombstones_path + ".consolidating"
-                )
+            _delete_path(self.spark, self._fold_tmp_path)
+            _delete_path(self.spark, self.tombstones_path + ".consolidating")
             return
-        fs, seg_path, jvm = _hadoop_fs(self.spark, self.segments_path)
+        fs, tmp, jvm = _hadoop_fs(self.spark, self._fold_tmp_path)
         P = jvm.org.apache.hadoop.fs.Path
-        tmp = P(self._fold_tmp_path)
         fold_max = int(intent["fold_max"])
-        dest = P(posixpath.join(self.segments_path, f"epoch={fold_max}"))
         if fs.exists(tmp):
             for e in intent["fold_epochs"]:
-                p = P(posixpath.join(self.segments_path, f"epoch={int(e)}"))
-                if fs.exists(p):
-                    fs.delete(p, True)
+                fs.delete(
+                    P(posixpath.join(self.segments_path, f"epoch={int(e)}")),
+                    True,
+                )
+            dest = P(posixpath.join(self.segments_path, f"epoch={fold_max}"))
             if not fs.rename(tmp, dest):
-                if not fs.exists(dest):
-                    raise IOError(
-                        f"fold recovery: failed to rename "
-                        f"{self._fold_tmp_path} -> epoch={fold_max}"
-                    )
-                # a racing recoverer renamed first; our tmp may remain
-                if fs.exists(tmp):
-                    fs.delete(tmp, True)
+                raise IOError(
+                    f"compact: failed to rename {self._fold_tmp_path} -> "
+                    f"epoch={fold_max}; the next write retries the commit"
+                )
         self._clear_fold_intent()
         self._sweep_dead_tombstones()
         self._tomb_bytes_cache = None
@@ -2016,7 +1992,7 @@ class MapIndex:
 
     def _clear_fold_intent(self) -> None:
         fs, hpath, _ = _hadoop_fs(
-            self.spark, posixpath.join(self.root, self._fold_intent_name)
+            self.spark, posixpath.join(self.root, _FOLD_INTENT)
         )
         if fs.exists(hpath):
             fs.delete(hpath, False)
@@ -2067,7 +2043,7 @@ class MapIndex:
         same history-horizon rule as the folds; current reads are
         identical before and after.
         """
-        self._recover_swap()
+        self._recover_fold()
         tomb_epochs = _list_epochs(self.spark, self.tombstones_path)
         if len(tomb_epochs) < 2:
             return 0
@@ -2153,102 +2129,6 @@ class MapIndex:
         self._refresh_views()
         return emptied
 
-    def _compact_partial(self, fold_epochs: list[int]) -> "MapIndex":
-        """Fold a CONTIGUOUS run of epochs into one segment at
-        ``hi = max(fold_epochs)`` — the bounded LSM merge whose cost
-        tracks the folded epochs' bytes, never the index size.
-
-        Correctness: the fold applies exactly the tombstones with
-        ``tomb_epoch <= hi`` to the folded rows (kill iff
-        ``row.epoch < tomb_epoch`` — the read() predicate) and writes
-        the survivors at epoch ``hi``. Moving a survivor from ``e`` to
-        ``hi >= e`` can never change its liveness: for any tombstone
-        ``T <= hi`` the row survived (``e >= T``), so ``hi >= T``
-        still survives; any ``T > hi`` killed it before and still
-        does. Tombstones above ``hi`` are untouched; tombstones at or
-        below the MINIMUM remaining segment epoch are debris and are
-        swept. Time travel: snapshots below ``hi`` inside the folded
-        range are destroyed (rows moved to ``hi``); snapshots at or
-        above ``hi`` — and, for a suffix fold, snapshots below the
-        folded range — read identically.
-
-        Commit protocol (journal + roll-forward, :meth:`_recover_fold`):
-        write folded copy to ``segments/.fold_tmp`` (invisible to
-        readers) -> journal ``fold.json`` (atomic) -> delete folded
-        ``epoch=`` dirs -> rename tmp to ``epoch={hi}`` -> drop
-        journal -> sweep dead tombstones. A crash anywhere re-enters
-        through the journal. Unsynchronized readers racing the
-        metadata commit window (the deletes + rename — O(K) namenode
-        ops, no data IO) can observe a torn listing, the same class of
-        anomaly as reading during an update() append; writers are
-        lease-serialized and crash-consistent throughout.
-        """
-        lo, hi = min(fold_epochs), max(fold_epochs)
-        segs = (
-            self.spark.read.parquet(self.segments_path)
-            .where((F.col("epoch") >= lo) & (F.col("epoch") <= hi))
-        )
-        tomb_epochs = [
-            t
-            for t in _list_epochs(self.spark, self.tombstones_path)
-            if t <= hi
-        ]
-        if tomb_epochs:
-            tombs = (
-                self.spark.read.parquet(self.tombstones_path)
-                .where(F.col("epoch") <= hi)
-                .groupBy(DOC_KEY)
-                .agg(F.max("epoch").alias("tomb_epoch"))
-            )
-            if self._tomb_bytes() * 4 <= TOMBSTONE_BROADCAST_BYTES:
-                tombs = F.broadcast(tombs)
-            segs = segs.alias("s").join(
-                tombs.alias("t"),
-                (F.col(f"s.{DOC_KEY}") == F.col(f"t.{DOC_KEY}"))
-                & (F.col("s.epoch") < F.col("t.tomb_epoch")),
-                "left_anti",
-            )
-        folded = segs.drop("epoch")
-        _delete_path(self.spark, self._fold_tmp_path)
-        (
-            folded.repartitionByRange("index_key", DOC_KEY)
-            .sortWithinPartitions("index_key", DOC_KEY, "emit_pos")
-            .write.mode("overwrite")
-            .parquet(self._fold_tmp_path)
-        )
-        # COMMIT POINT: from here a crash rolls forward via the journal
-        self.put_sidecar(
-            {
-                "type": "fold-intent",
-                "fold_epochs": [int(e) for e in fold_epochs],
-                "fold_max": int(hi),
-            },
-            name=self._fold_intent_name,
-        )
-        fs, _, jvm = _hadoop_fs(self.spark, self.segments_path)
-        P = jvm.org.apache.hadoop.fs.Path
-        for e in fold_epochs:
-            fs.delete(
-                P(posixpath.join(self.segments_path, f"epoch={int(e)}")),
-                True,
-            )
-        dest = P(posixpath.join(self.segments_path, f"epoch={int(hi)}"))
-        if not fs.rename(P(self._fold_tmp_path), dest):
-            # tolerated only when a racing read-path recoverer already
-            # rolled the commit forward (same-bytes rename)
-            if not fs.exists(dest):
-                raise IOError(
-                    f"compact(partial): failed to rename "
-                    f"{self._fold_tmp_path} -> epoch={hi}"
-                )
-        self._clear_fold_intent()
-        self._sweep_dead_tombstones()
-        self._tomb_bytes_cache = None
-        self._seg_bytes_by_epoch.clear()
-        self._set_compaction_due()
-        self._refresh_views()
-        return self
-
     @_writer
     def drop(self) -> None:
         """Destroy the stored index: segments, tombstones, sidecars —
@@ -2314,12 +2194,12 @@ class MapIndex:
         ``auto_compact``, else on the caller's schedule when
         ``compaction_due``).
 
-        ``max_epochs=None`` (default) is the FULL fold: every epoch
-        into a single segment set, all tombstones reclaimed — an
-        O(index) rewrite, fine at small scale, a multi-hour stall at
-        100 TB. ``max_epochs=K`` bounds the fold to K epochs so upkeep
-        is schedulable (cost tracks the folded epochs' bytes, never
-        the index size — measured by ``scripts/churn_probe.py``):
+        ``max_epochs=None`` (default) is the FULL fold: every segment
+        epoch into one, all tombstones reclaimed — an O(index) rewrite,
+        fine at small scale, a multi-hour stall at 100 TB.
+        ``max_epochs=K`` bounds the fold to K contiguous epochs so
+        upkeep is schedulable (cost tracks the folded epochs' bytes,
+        never the index size — measured by ``scripts/churn_probe.py``):
 
         - ``tier="newest"`` — minor compaction: fold the K newest
           epochs (the small fresh deltas) into one. Cheap, cuts read
@@ -2332,21 +2212,29 @@ class MapIndex:
           the fold target. Run rarely, sized by how many epochs the
           schedule can afford to rewrite.
 
-        Full-fold mechanics: the folded segment keeps ``epoch =
-        max(existing epochs)``, NOT 0: read() keeps rows where
-        ``seg.epoch >= tomb_epoch``, so if a crash lands after the
-        segment swap but before tombstone cleanup, the stale
-        tombstones (all ``tomb_epoch <= max``) cannot kill any
-        compacted row — tombstone deletion is pure cleanup, not a
-        correctness step. Swap order: write compacted → rename live
-        dir aside → rename compacted in → delete old. A crash anywhere
-        in the window leaves a state :meth:`_recover_swap` rolls
-        forward (compacted copy complete) or back (pre-swap copy) on
-        the next read/update/compact. Partial-fold mechanics:
-        :meth:`_compact_partial` (journaled epoch-level commit,
-        :meth:`_recover_fold`).
+        Both forms are one fold of epochs ``[lo, hi]``: the rows
+        :meth:`_live` keeps (tombstones ``<= hi`` applied) are written
+        at the target epoch — ``hi`` for a bounded fold, ``max(segment
+        ∪ tombstone epochs)`` for the full fold. Moving a survivor from
+        ``e`` to a target ``>= e`` never changes its liveness: for any
+        tombstone ``T <= hi`` the row survived (``e >= T``), so the
+        target survives it too; any ``T`` above the target killed it
+        before and still does. Tombstones at or below the minimum
+        remaining segment epoch are then swept — after a full fold,
+        all of them. Time travel: snapshots below the target inside
+        the folded range are destroyed (rows moved up); snapshots at
+        or above it — and, for a newest-tier fold, below the folded
+        range — read identically.
+
+        Commit (journal + roll-forward, :meth:`_recover_fold`): write
+        the folded copy to ``segments/.fold_tmp`` (invisible to
+        readers) -> journal ``fold.json`` (atomic) -> delete the folded
+        ``epoch=`` dirs -> rename the tmp to ``epoch={target}`` -> drop
+        the journal -> sweep dead tombstones. A crash anywhere
+        re-enters through the journal at the next write-path entry;
+        readers meanwhile serve the post-fold view and change nothing.
         """
-        self._recover_swap()
+        self._recover_fold()
         # janitor duty: a delete_range that died mid-call leaves its
         # _scratch staging behind (its finally never ran). The lease
         # serializes writers ACROSS handles, but NOT this handle's own
@@ -2367,60 +2255,43 @@ class MapIndex:
                 if tier == "oldest"
                 else epochs[-max_epochs:]
             )
-            return self._compact_partial(fold)
-        # fold target = max over segments AND tombstones: a pure-delete
-        # batch (delete_range / all-tombstone update) holds the top
-        # epoch number with no segment dir, and folding to max(segment)
-        # alone would hand that number BACK to the next update() once
-        # the tombstones are reclaimed — silently rebinding an already-
-        # observable as_of_epoch snapshot to a different state
-        # (_next_epoch's distinct-snapshot contract; caught by
-        # tests/test_model.py). Also widens the stale-tombstone crash
-        # margin below: keep_epoch >= every tomb_epoch.
-        tomb_epochs = _list_epochs(self.spark, self.tombstones_path)
-        keep_epoch = max(epochs + tomb_epochs) if (epochs or tomb_epochs) else 0
-        live = self.read()
-        tmp = self.segments_path + ".compacting"
-        old = self.segments_path + ".old"
+            target = fold[-1]
+            rows = self._live(fold[0], target)
+        else:
+            # full-fold target = max over segments AND tombstones: a
+            # pure-delete batch (delete_range / all-tombstone update)
+            # holds the top epoch number with no segment dir, and
+            # folding to max(segment) alone would hand that number
+            # BACK to the next update() once the tombstones are
+            # reclaimed — silently rebinding an already-observable
+            # as_of_epoch snapshot to a different state (_next_epoch's
+            # distinct-snapshot contract; caught by tests/
+            # test_model.py). A fully tombstoned index folds to zero
+            # rows and still keeps its epoch: the unpartitioned
+            # .fold_tmp write creates the dir even for an empty frame.
+            fold = epochs
+            target = max(
+                epochs + _list_epochs(self.spark, self.tombstones_path),
+                default=0,
+            )
+            rows = self._live()
         (
-            # write STRAIGHT INTO the epoch=K dir (same partitioned
-            # layout partitionBy would produce) rather than through
-            # partitionBy: a fully-tombstoned index folds to ZERO live
-            # rows, and partitionBy on an empty frame creates no
-            # partition dir at all — the epoch number would vanish and
-            # _next_epoch would hand it back to the next batch (the
-            # epoch-reuse bug all over again, empty-live variant)
-            live.repartitionByRange("index_key", DOC_KEY)
+            rows.repartitionByRange("index_key", DOC_KEY)
             .sortWithinPartitions("index_key", DOC_KEY, "emit_pos")
             .write.mode("overwrite")
-            .parquet(posixpath.join(tmp, f"epoch={int(keep_epoch)}"))
+            .parquet(self._fold_tmp_path)
         )
-        fs, seg_path, jvm = _hadoop_fs(self.spark, self.segments_path)
-        _delete_path(self.spark, old)
-        # Swap with CHECKED renames (Hadoop signals failure via a
-        # false return). rename-in is tolerated-false only when the
-        # destination already exists: a concurrent READER that caught
-        # us between the two renames legally rolled the complete
-        # .compacting copy forward itself (_recover_swap, cleanup
-        # =False) — same bytes, so the swap is already done.
-        if not fs.rename(seg_path, jvm.org.apache.hadoop.fs.Path(old)):
-            raise IOError(
-                f"compact: failed to move live segments aside "
-                f"({self.segments_path} -> .old); index unchanged"
-            )
-        if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), seg_path):
-            if not fs.exists(seg_path):
-                # roll back: put the live copy straight back
-                fs.rename(jvm.org.apache.hadoop.fs.Path(old), seg_path)
-                raise IOError(
-                    "compact: failed to rename the compacted copy in; "
-                    "rolled back to the pre-compact segments"
-                )
-        _delete_path(self.spark, self.tombstones_path)
-        _delete_path(self.spark, old)
-        self._tomb_bytes_cache = None
-        self._seg_bytes_by_epoch.clear()
-        self.compaction_due = False
+        # COMMIT POINT: from here a crash rolls forward via the journal
+        self.put_sidecar(
+            {
+                "type": "fold-intent",
+                "fold_epochs": [int(e) for e in fold],
+                "fold_max": int(target),
+            },
+            name=_FOLD_INTENT,
+        )
+        self._recover_fold()
+        self._set_compaction_due()
         self._refresh_views()
         return self
 

@@ -1330,220 +1330,223 @@ def semdedup_update(
     # builds the cache in its own job) and is released before the
     # engine write below rewrites the files the plan reads.
     stored = stored.drop("_codes").persist()
-    base = stored.groupBy("cluster").agg(
-        F.max("rank").alias("_base"), F.count("*").alias("_nstored")
-    )
-    w = Window.partitionBy("cluster").orderBy("centroid_sim", "vec_id")
-    ranked_new = (
-        newa.where(F.col("cluster") >= 0)
-        .withColumn("_rk_in", F.row_number().over(w).cast("long"))
-        .join(F.broadcast(base), "cluster", "left")
-        .withColumn(
-            "rank",
-            F.coalesce(F.col("_base"), F.lit(0).cast("long"))
-            + F.col("_rk_in"),
+    try:
+        base = stored.groupBy("cluster").agg(
+            F.max("rank").alias("_base"), F.count("*").alias("_nstored")
         )
-        .withColumn(
-            "_skip",
-            F.coalesce(F.col("_nstored"), F.lit(0).cast("long"))
-            > max_cluster,
+        w = Window.partitionBy("cluster").orderBy("centroid_sim", "vec_id")
+        ranked_new = (
+            newa.where(F.col("cluster") >= 0)
+            .withColumn("_rk_in", F.row_number().over(w).cast("long"))
+            .join(F.broadcast(base), "cluster", "left")
+            .withColumn(
+                "rank",
+                F.coalesce(F.col("_base"), F.lit(0).cast("long"))
+                + F.col("_rk_in"),
+            )
+            .withColumn(
+                "_skip",
+                F.coalesce(F.col("_nstored"), F.lit(0).cast("long"))
+                > max_cluster,
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    preds = stored.select(
-        "cluster",
-        F.col("rank").alias("_r"),
-        F.col("vec_id").alias("_lid"),
-        F.col("_e").alias("_eb"),
-    ).unionByName(
-        ranked_new.select(
+        preds = stored.select(
             "cluster",
             F.col("rank").alias("_r"),
             F.col("vec_id").alias("_lid"),
             F.col("_e").alias("_eb"),
-        )
-    )
-    x_side = ranked_new.where(~F.col("_skip")).select(
-        "cluster",
-        F.col("rank").alias("_xrk"),
-        "vec_id",
-        F.col("_e").alias("_ea"),
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    sim = F.when(
-        F.col("_na") * F.col("_nb") > 0,
-        F.round(
-            _pair_dot(F.col("_ea"), F.col("_eb"))
-            / (F.col("_na") * F.col("_nb")),
-            6,
-        ),
-    )
-    pair_threshold = (
-        threshold - margin if storage == "pq" else threshold
-    )
-    cands = (
-        x_side.join(preds, "cluster")
-        .where(F.col("_r") < F.col("_xrk"))
-        .withColumn("_na", norm(F.col("_ea")))
-        .withColumn("_nb", norm(F.col("_eb")))
-        .withColumn("_ls", sim)
-        .where(unpushable(F.col("_ls") >= pair_threshold))
-    )
-    if storage == "pq":
-        # exact re-verification (the ivfpq_knn_join pattern): pin the
-        # bounded candidate set (<= batch x cluster rows, eager
-        # localCheckpoint), then fetch ONLY those candidates' true
-        # embeddings — this batch's from the assignment frame,
-        # everything older from the caller's source table. Pruning the
-        # corpus-sized source with a broadcast LEFT-SEMI on the
-        # distinct candidate ids BEFORE the left-outer join keeps the
-        # update O(changed docs): a left-outer join cannot broadcast
-        # its small LEFT side, so joining the raw source would shuffle
-        # the whole table by _lid. A candidate missing from the source
-        # still RAISES (silently dropping it would hide a dup).
-        cands = cands.drop("_eb", "_nb", "_ls").localCheckpoint(
-            eager=True
-        )
-        cand_ids = cands.select("_lid").distinct()
-        exact_src = (
-            source_embeddings.select(
-                F.col("vec_id").cast("long").alias("_lid"),
-                _as_double_array(F.col("embedding")).alias("_ebx"),
-            )
-            .join(F.broadcast(cand_ids), "_lid", "left_semi")
-            .join(
-                F.broadcast(newa.select(F.col("vec_id").alias("_lid"))),
-                "_lid",
-                "left_anti",
-            )
-            .unionByName(
-                newa.select(
-                    F.col("vec_id").alias("_lid"),
-                    F.col("_e").alias("_ebx"),
-                ).join(F.broadcast(cand_ids), "_lid", "left_semi")
+        ).unionByName(
+            ranked_new.select(
+                "cluster",
+                F.col("rank").alias("_r"),
+                F.col("vec_id").alias("_lid"),
+                F.col("_e").alias("_eb"),
             )
         )
-        # the pruned frame is candidate-sized, so asserting vec_id
-        # uniqueness is cheap: a duplicated source row would multiply
-        # candidate rows, and divergent embeddings under one vec_id
-        # would make the min-struct leader pick nondeterministic —
-        # fail loudly instead
-        exact_src = (
-            exact_src.groupBy("_lid")
-            .agg(
-                F.count(F.lit(1)).alias("_c"),
-                F.first("_ebx").alias("_ebx"),
-            )
-            .withColumn(
-                "_ebx",
-                F.when(F.col("_c") == 1, F.col("_ebx")).otherwise(
-                    F.raise_error(
-                        F.concat(
-                            F.lit("semdedup_update: vec_id "),
-                            F.col("_lid").cast("string"),
-                            F.lit(
-                                " appears more than once in "
-                                "source_embeddings — the source must "
-                                "be vec_id-unique (like the build "
-                                "corpus)"
-                            ),
-                        )
-                    )
-                ),
-            )
-            .drop("_c")
+        x_side = ranked_new.where(~F.col("_skip")).select(
+            "cluster",
+            F.col("rank").alias("_xrk"),
+            "vec_id",
+            F.col("_e").alias("_ea"),
+        )
+        norm = lambda c: F.sqrt(  # noqa: E731
+            F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
+        )
+        sim = F.when(
+            F.col("_na") * F.col("_nb") > 0,
+            F.round(
+                _pair_dot(F.col("_ea"), F.col("_eb"))
+                / (F.col("_na") * F.col("_nb")),
+                6,
+            ),
+        )
+        pair_threshold = (
+            threshold - margin if storage == "pq" else threshold
         )
         cands = (
-            cands.join(exact_src, "_lid", "left")
-            .withColumn(
-                "_eb",
-                F.when(F.col("_ebx").isNotNull(), F.col("_ebx")).otherwise(
-                    F.raise_error(
-                        F.concat(
-                            F.lit(
-                                "semdedup_update: candidate vec_id "
-                            ),
-                            F.col("_lid").cast("string"),
-                            F.lit(
-                                " missing from source_embeddings — "
-                                "the source must contain every "
-                                "ingested vector"
-                            ),
-                        )
-                    )
-                ),
-            )
-            .drop("_ebx")
+            x_side.join(preds, "cluster")
+            .where(F.col("_r") < F.col("_xrk"))
+            .withColumn("_na", norm(F.col("_ea")))
             .withColumn("_nb", norm(F.col("_eb")))
             .withColumn("_ls", sim)
-            .where(unpushable(F.col("_ls") >= threshold))
+            .where(unpushable(F.col("_ls") >= pair_threshold))
         )
-    leaders = (
-        cands.groupBy("vec_id")
-        .agg(
-            F.min(
-                F.struct(
-                    F.col("_r"),
-                    F.col("_lid").alias("leader_id"),
-                    F.col("_ls").alias("leader_sim"),
+        if storage == "pq":
+            # exact re-verification (the ivfpq_knn_join pattern): pin the
+            # bounded candidate set (<= batch x cluster rows, eager
+            # localCheckpoint), then fetch ONLY those candidates' true
+            # embeddings — this batch's from the assignment frame,
+            # everything older from the caller's source table. Pruning the
+            # corpus-sized source with a broadcast LEFT-SEMI on the
+            # distinct candidate ids BEFORE the left-outer join keeps the
+            # update O(changed docs): a left-outer join cannot broadcast
+            # its small LEFT side, so joining the raw source would shuffle
+            # the whole table by _lid. A candidate missing from the source
+            # still RAISES (silently dropping it would hide a dup).
+            cands = cands.drop("_eb", "_nb", "_ls").localCheckpoint(
+                eager=True
+            )
+            cand_ids = cands.select("_lid").distinct()
+            exact_src = (
+                source_embeddings.select(
+                    F.col("vec_id").cast("long").alias("_lid"),
+                    _as_double_array(F.col("embedding")).alias("_ebx"),
                 )
-            ).alias("_ld")
+                .join(F.broadcast(cand_ids), "_lid", "left_semi")
+                .join(
+                    F.broadcast(newa.select(F.col("vec_id").alias("_lid"))),
+                    "_lid",
+                    "left_anti",
+                )
+                .unionByName(
+                    newa.select(
+                        F.col("vec_id").alias("_lid"),
+                        F.col("_e").alias("_ebx"),
+                    ).join(F.broadcast(cand_ids), "_lid", "left_semi")
+                )
+            )
+            # the pruned frame is candidate-sized, so asserting vec_id
+            # uniqueness is cheap: a duplicated source row would multiply
+            # candidate rows, and divergent embeddings under one vec_id
+            # would make the min-struct leader pick nondeterministic —
+            # fail loudly instead
+            exact_src = (
+                exact_src.groupBy("_lid")
+                .agg(
+                    F.count(F.lit(1)).alias("_c"),
+                    F.first("_ebx").alias("_ebx"),
+                )
+                .withColumn(
+                    "_ebx",
+                    F.when(F.col("_c") == 1, F.col("_ebx")).otherwise(
+                        F.raise_error(
+                            F.concat(
+                                F.lit("semdedup_update: vec_id "),
+                                F.col("_lid").cast("string"),
+                                F.lit(
+                                    " appears more than once in "
+                                    "source_embeddings — the source must "
+                                    "be vec_id-unique (like the build "
+                                    "corpus)"
+                                ),
+                            )
+                        )
+                    ),
+                )
+                .drop("_c")
+            )
+            cands = (
+                cands.join(exact_src, "_lid", "left")
+                .withColumn(
+                    "_eb",
+                    F.when(F.col("_ebx").isNotNull(), F.col("_ebx")).otherwise(
+                        F.raise_error(
+                            F.concat(
+                                F.lit(
+                                    "semdedup_update: candidate vec_id "
+                                ),
+                                F.col("_lid").cast("string"),
+                                F.lit(
+                                    " missing from source_embeddings — "
+                                    "the source must contain every "
+                                    "ingested vector"
+                                ),
+                            )
+                        )
+                    ),
+                )
+                .drop("_ebx")
+                .withColumn("_nb", norm(F.col("_eb")))
+                .withColumn("_ls", sim)
+                .where(unpushable(F.col("_ls") >= threshold))
+            )
+        leaders = (
+            cands.groupBy("vec_id")
+            .agg(
+                F.min(
+                    F.struct(
+                        F.col("_r"),
+                        F.col("_lid").alias("leader_id"),
+                        F.col("_ls").alias("leader_sim"),
+                    )
+                ).alias("_ld")
+            )
+            .select("vec_id", "_ld.leader_id", "_ld.leader_sim")
         )
-        .select("vec_id", "_ld.leader_id", "_ld.leader_sim")
-    )
-    all_new = ranked_new.select(
-        "vec_id", "cluster", "centroid_sim", "rank", "_e"
-    ).unionByName(
-        newa.where(F.col("cluster") < 0).select(
-            "vec_id",
-            "cluster",
-            "centroid_sim",
-            F.lit(0).cast("long").alias("rank"),
-            "_e",
+        all_new = ranked_new.select(
+            "vec_id", "cluster", "centroid_sim", "rank", "_e"
+        ).unionByName(
+            newa.where(F.col("cluster") < 0).select(
+                "vec_id",
+                "cluster",
+                "centroid_sim",
+                F.lit(0).cast("long").alias("rank"),
+                "_e",
+            )
         )
-    )
-    if storage == "pq":
-        # append new members as codes too (frozen codebooks), and
-        # drop their embeddings from storage — the shrink holds
-        # under churn, not just at build
-        from level_mapreduce_spark.operators.pq import pq_encode
+        if storage == "pq":
+            # append new members as codes too (frozen codebooks), and
+            # drop their embeddings from storage — the shrink holds
+            # under churn, not just at build
+            from level_mapreduce_spark.operators.pq import pq_encode
 
-        new_codes = pq_encode(
-            all_new.select("vec_id", F.col("_e").alias("embedding")),
-            books,
-        ).withColumnRenamed("codes", "_codes")
-        all_new = all_new.join(new_codes, "vec_id").withColumn(
-            "_e", F.lit(None).cast("array<double>")
+            new_codes = pq_encode(
+                all_new.select("vec_id", F.col("_e").alias("embedding")),
+                books,
+            ).withColumnRenamed("codes", "_codes")
+            all_new = all_new.join(new_codes, "vec_id").withColumn(
+                "_e", F.lit(None).cast("array<double>")
+            )
+        else:
+            all_new = all_new.withColumn(
+                "_codes", F.lit(None).cast("array<int>")
+            )
+        # pinned BEFORE the update: the plan reads the index's current
+        # epochs, and update() may auto-compact (rewrite/remove those
+        # files); eager localCheckpoint materializes the decisions first
+        # so both the write and the returned frame are storage-stable
+        out = (
+            all_new.join(leaders, "vec_id", "left")
+            .select(
+                "vec_id",
+                "cluster",
+                "centroid_sim",
+                F.col("leader_id").isNull().alias("keep"),
+                "leader_id",
+                "leader_sim",
+                "rank",
+                "_e",
+                "_codes",
+            )
+            .localCheckpoint(eager=True)
         )
-    else:
-        all_new = all_new.withColumn(
-            "_codes", F.lit(None).cast("array<int>")
-        )
-    # pinned BEFORE the update: the plan reads the index's current
-    # epochs, and update() may auto-compact (rewrite/remove those
-    # files); eager localCheckpoint materializes the decisions first
-    # so both the write and the returned frame are storage-stable
-    out = (
-        all_new.join(leaders, "vec_id", "left")
-        .select(
-            "vec_id",
-            "cluster",
-            "centroid_sim",
-            F.col("leader_id").isNull().alias("keep"),
-            "leader_id",
-            "leader_sim",
-            "rank",
-            "_e",
-            "_codes",
-        )
-        .localCheckpoint(eager=True)
-    )
-    # the decisions are pinned — the cached stored slice is done
-    # (releasing BEFORE the engine write also keeps the cache from
-    # shadowing the rewritten files for any later reader)
-    stored.unpersist()
+    finally:
+        # the decisions are pinned (or the pipeline failed) — the
+        # cached stored slice is done either way; releasing BEFORE the
+        # engine write also keeps the cache from shadowing the
+        # rewritten files for any later reader
+        stored.unpersist()
     idx.update(out, assume_unique=True)
     return out.select(
         "vec_id",

@@ -142,7 +142,7 @@ def _tombstone_compacted_index(spark: SparkSession, sf_dir: str) -> MapIndex:
     (oldest-K) fold that reclaims them — before the entry reads the
     result. The final rows must equal the never-compacted semantics,
     proving the bounded fold preserves the read view through the
-    driver's hash gate (engine/index.py::_compact_partial)."""
+    oracle hash gate (engine/index.py::MapIndex.compact)."""
 
     def build():
         orders = load_table(spark, sf_dir, "orders")
@@ -181,8 +181,8 @@ def _tombstone_compacted_index(spark: SparkSession, sf_dir: str) -> MapIndex:
             ),
             assume_unique=True,
         )
-        # THREE delta epochs so BOTH bounded folds genuinely dispatch
-        # to _compact_partial (r9 review: with only two, the second
+        # THREE delta epochs so BOTH bounded folds genuinely fold a
+        # bounded run (r9 review: with only two, the second
         # call saw len(epochs)==2 and silently ran the FULL fold —
         # vacuous coverage). The epoch-count asserts keep this loud.
         from level_mapreduce_spark.engine.index import _list_epochs
@@ -697,7 +697,8 @@ def q_tombstone(spark, sf_dir):
     - ``partial_compact`` (r9): the same scenario + three overwrite
       epochs on a TWIN index, folded by a newest-tier then an
       oldest-tier bounded compaction before reading — gates
-      engine/index.py::_compact_partial's view preservation.
+      the bounded form of engine/index.py::MapIndex.compact's view
+      preservation.
 
     The first three variants are partition-pruned epoch filters over
     the same stored segments; all four are oracle-exact in SQL."""

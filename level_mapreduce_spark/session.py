@@ -12,6 +12,39 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: ceiling of the derived spark.driver.memory default, in GiB
+_DRIVER_MEMORY_CAP_GB = 48
+
+
+def _default_driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` when SPARK_DRIVER_MEMORY is unset: half
+    the machine's physical memory in whole GiB (at least 1g, at most
+    48g). In local mode the driver JVM hosts every executor, so a heap
+    ceiling above physical memory lets it grow until the kernel
+    OOM-kills it; the other half is left to the Python workers and
+    the OS. Falls back to the cap where ``os.sysconf`` cannot report
+    physical memory."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, OSError, ValueError):
+            return f"{_DRIVER_MEMORY_CAP_GB}g"
+    gib = phys_bytes // 2 // (1 << 30)
+    return f"{max(1, min(_DRIVER_MEMORY_CAP_GB, gib))}g"
+
+
+def _conf_met(key: str, requested: str, effective: str | None) -> bool:
+    """True iff a live session's ``effective`` conf value satisfies a
+    ``requested`` one. ``*.extraJavaOptions`` is met when every
+    requested option appears in the effective value: PySpark prepends
+    its own ``--add-opens`` flags, so the two are never equal."""
+    if effective is None:
+        return False
+    if key.endswith(".extraJavaOptions"):
+        have = str(effective).split()
+        return all(opt in have for opt in str(requested).split())
+    return str(effective).lower() == str(requested).lower()
+
 
 def get_spark(
     app_name: str = "level_mapreduce_spark",
@@ -66,24 +99,6 @@ def get_spark(
             ),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # guide §3.1: allow shuffled-hash join where the planner's
-        # size conditions hold (sort-merge is the default preference;
-        # SHJ skips both sorts). Parameterised for A/B — local
-        # default keeps the driver's bench comparable; flip per-run
-        # with SPARK_GRAFT_PREFER_SMJ=false.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
-        # guide §6: parquet codec for every engine segment/sidecar
-        # write. Default stays snappy (Spark's default, keeps the
-        # driver's bench comparable); parameterised so a deployment —
-        # or the r16 A/B probe — can flip to zstd (smaller files at
-        # similar read speed on storage-bound clusters).
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "snappy"),
-        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -91,7 +106,10 @@ def get_spark(
         # read the /api/v1 stage metrics REST surface set
         # SPARK_GRAFT_UI=true (scripts/endurance_probe.py)
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
     )
     # static conf (UI retention, codegen cache, ...) must land before
     # the context exists — probes pass it here rather than mutating a
@@ -106,10 +124,9 @@ def get_spark(
     # of mis-measuring — the caller must stop the existing session (or
     # run in a fresh process) to get the confs it asked for.
     # Only STATIC confs need this mismatch check (ADVICE r16): the
-    # env-driven knobs above (SPARK_GRAFT_PREFER_SMJ,
-    # SPARK_GRAFT_PARQUET_CODEC, shuffle width) are modifiable runtime
-    # confs that getOrCreate() propagates to a pre-existing session,
-    # so they are deliberately absent here. A future env knob that
+    # env-driven shuffle width above is a modifiable runtime conf
+    # that getOrCreate() propagates to a pre-existing session, so it
+    # is deliberately absent here. A future env knob that
     # sets a STATIC conf must be added to ``requested`` like
     # SPARK_GRAFT_UI below, or a reused session will silently ignore
     # it.
@@ -127,7 +144,7 @@ def get_spark(
     sc_conf = spark.sparkContext.getConf()
     for k, v in requested.items():
         got = sc_conf.get(k, None)
-        if got is None or str(got).lower() != str(v).lower():
+        if not _conf_met(k, v, got):
             stale[k] = (v, got)
     if stale:
         raise RuntimeError(

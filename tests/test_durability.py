@@ -6,6 +6,7 @@ property-based incremental==rebuild check under random churn.
 import json
 import os
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -41,7 +42,7 @@ def live_rows(idx):
 
 def test_stale_tombstones_after_compact_are_harmless(spark, store):
     """Simulates the compact() crash window ADVICE r2 flagged: the
-    segment swap completed but tombstone cleanup did not. Because the
+    segment commit completed but tombstone cleanup did not. Because the
     folded segment keeps epoch=max (>= every stale tomb_epoch), the
     leftover tombstones cannot kill compacted rows."""
     idx = kv_index(spark, store, "crash")
@@ -57,7 +58,9 @@ def test_stale_tombstones_after_compact_are_harmless(spark, store):
     tomb_bak = store + "/tomb_bak"
     shutil.copytree(idx.tombstones_path, tomb_bak)
     idx.compact()
-    shutil.copytree(tomb_bak, idx.tombstones_path)
+    # the fold's dead-tombstone sweep empties the tombstone root but
+    # leaves the directory itself in place
+    shutil.copytree(tomb_bak, idx.tombstones_path, dirs_exist_ok=True)
     idx._tomb_bytes_cache = None
 
     assert live_rows(idx) == before
@@ -65,56 +68,6 @@ def test_stale_tombstones_after_compact_are_harmless(spark, store):
     idx.update(kv_df(spark, [{"doc_key": "d2", "k": "a", "v": 300.0}]))
     want = [r for r in before if r[0] != "d2"] + [("d2", "a", 300.0)]
     assert live_rows(idx) == sorted(want)
-
-
-def test_compact_crash_mid_swap_recovers(spark, store):
-    """The harder crash window (ADVICE r3): between rename(segments ->
-    .old) and rename(.compacting -> segments) there is NO segments dir.
-    _recover_swap must roll forward from the complete .compacting copy
-    (or back from .old), never silently read an empty index."""
-    import shutil
-
-    idx = kv_index(spark, store, "midswap")
-    idx.build(kv_df(spark, [{"doc_key": f"d{i}", "k": "a", "v": float(i)} for i in range(5)]))
-    idx.update(kv_df(spark, [{"doc_key": "d0", "k": "a", "v": 50.0}]))
-    before = live_rows(idx)
-    seg = idx.segments_path
-
-    # roll FORWARD: compacted copy written, segments renamed aside,
-    # crash before .compacting renamed in. read() serves the complete
-    # compacted copy but — not holding the writer lease — must NOT
-    # delete leftovers (a .compacting beside live segments could be a
-    # LIVE writer's in-progress copy; only write paths clean up).
-    idx.compact()  # produces the folded single-epoch copy
-    shutil.copytree(seg, seg + ".compacting")
-    os.rename(seg, seg + ".old")
-    assert live_rows(idx) == before  # read() recovered
-    assert os.path.exists(seg)
-    assert os.path.exists(seg + ".old")  # read leaves cleanup to writers
-    # the next WRITE-path entry (lease held) cleans the leftovers
-    idx.update(kv_df(spark, [{"doc_key": "d0", "k": "a", "v": 50.0}]))
-    assert not os.path.exists(seg + ".old")
-    assert not os.path.exists(seg + ".compacting")
-    assert live_rows(idx) == before
-
-    # roll BACK: only .old remains (compacted copy lost with the crash)
-    os.rename(seg, seg + ".old")
-    assert live_rows(idx) == before
-    assert os.path.exists(seg) and not os.path.exists(seg + ".old")
-
-    # dead leftovers beside intact segments: read() serves and leaves
-    # them; update() (writer) deletes them
-    os.makedirs(seg + ".compacting/epoch=9", exist_ok=True)
-    os.makedirs(seg + ".old/epoch=9", exist_ok=True)
-    assert live_rows(idx) == before
-    assert os.path.exists(seg + ".compacting")
-    idx.update(kv_df(spark, [{"doc_key": "d0", "k": "a", "v": 50.0}]))
-    assert not os.path.exists(seg + ".compacting")
-    assert not os.path.exists(seg + ".old")
-
-    # the index keeps working end-to-end after recovery
-    idx.update(kv_df(spark, [{"doc_key": "d9", "k": "z", "v": 9.0}]))
-    assert ("d9", "z", 9.0) in live_rows(idx)
 
 
 def test_replayed_update_batch_converges(spark, store):
@@ -707,61 +660,149 @@ def test_partial_compact_newest_minor_fold(spark, store):
     assert live_rows(idx) == before
 
 
-def test_partial_compact_crash_rolls_forward(spark, store):
-    """Crash-window coverage of the journaled partial-fold commit:
-    after the journal is written but before the epoch swap, the next
-    entry (read or write) rolls the fold forward from .fold_tmp and
-    the live view is intact."""
-    idx, exp = _churned_index(spark, store, "pc_crash")
-    n0 = len(_epochs(idx))
+class _Crash(Exception):
+    pass
+
+
+def _fold_setup(spark, store, name, kind):
+    """A churned index ready for the fold ``kind``, plus the compact()
+    call that runs it: ``partial`` folds the 3 oldest epochs; ``full``
+    folds everything; ``above_top`` is a full fold whose target is a
+    tombstone-only epoch above the top segment epoch (delete_range
+    last); ``all_dead`` is a full fold of an index whose every doc is
+    tombstoned."""
+    idx, _ = _churned_index(spark, store, name)
+    if kind == "above_top":
+        assert idx.delete_range(key="a") > 0
+    elif kind == "all_dead":
+        assert idx.delete_range() > 0
+        assert live_rows(idx) == []
+    if kind == "partial":
+        return idx, lambda: idx.compact(max_epochs=3, tier="oldest")
+    return idx, lambda: idx.compact()
+
+
+def _expected_fold(idx, kind):
+    """(fold_epochs, target) the compact() of ``kind`` must journal."""
+    eps = _epochs(idx)
+    if kind == "partial":
+        return eps[:3], eps[2]
+    return eps, max(eps + _tomb_epochs(idx))
+
+
+def _after_journal(idx, monkeypatch, hook):
+    """Run ``hook()`` right after the next fold's journal lands (the
+    commit point), before any delete or rename."""
+    orig = idx.put_sidecar
+
+    def put_then_hook(obj, name="meta.json"):
+        orig(obj, name=name)
+        if name == "fold.json":
+            hook()
+
+    monkeypatch.setattr(idx, "put_sidecar", put_then_hook)
+
+
+def _crash():
+    raise _Crash()
+
+
+def _assert_fold_committed(idx, kind, fold, target, n0):
+    assert idx.get_sidecar(name="fold.json") is None
+    assert not os.path.exists(idx._fold_tmp_path)
+    if kind == "partial":
+        assert len(_epochs(idx)) == n0 - len(fold) + 1
+        assert target in _epochs(idx)
+    else:
+        # one epoch, numbered by the max over segment AND tombstone
+        # epochs; the dead-tombstone sweep reclaimed every tombstone
+        assert _epochs(idx) == [target]
+        assert _tomb_epochs(idx) == []
+
+
+def _check_crash_rolls_forward(spark, store, monkeypatch, kind):
+    """Crash-window coverage of the journaled fold commit: after the
+    journal is written (and, here, after one of the commit's deletes
+    landed) a fresh reader serves the pre-crash rows from the
+    post-fold view and leaves fold.json and .fold_tmp in place; the
+    next write-path entry completes the fold and drops the journal."""
+    name = f"crash_{kind}"
+    idx, fold_call = _fold_setup(spark, store, name, kind)
     before = live_rows(idx)
-    fold = _epochs(idx)[:3]
+    n0 = len(_epochs(idx))
+    fold, target = _expected_fold(idx, kind)
+    _after_journal(idx, monkeypatch, _crash)
+    with pytest.raises(_Crash):
+        fold_call()
+    assert idx.get_sidecar(name="fold.json") == {
+        "type": "fold-intent",
+        "fold_epochs": fold,
+        "fold_max": target,
+    }
+    # the crash also landed one of the commit's deletes
+    import shutil
 
-    # stage the fold by hand exactly as _compact_partial does, then
-    # "crash" before any delete/rename
-    from pyspark.sql import functions as F2
+    shutil.rmtree(os.path.join(idx.segments_path, f"epoch={fold[0]}"))
 
-    hi = max(fold)
-    segs = (
-        spark.read.parquet(idx.segments_path)
-        .where((F2.col("epoch") >= min(fold)) & (F2.col("epoch") <= hi))
-    )
-    tombs = (
-        spark.read.parquet(idx.tombstones_path)
-        .where(F2.col("epoch") <= hi)
-        .groupBy("doc_key")
-        .agg(F2.max("epoch").alias("tomb_epoch"))
-    )
-    survivors = segs.alias("s").join(
-        tombs.alias("t"),
-        (F2.col("s.doc_key") == F2.col("t.doc_key"))
-        & (F2.col("s.epoch") < F2.col("t.tomb_epoch")),
-        "left_anti",
-    ).drop("epoch")
-    survivors.write.mode("overwrite").parquet(idx._fold_tmp_path)
-    idx.put_sidecar(
-        {"type": "fold-intent", "fold_epochs": fold, "fold_max": hi},
-        name="fold.json",
-    )
-
-    # a FRESH handle (the post-crash process) reads: fold recovered
-    fresh = kv_index(spark, store, "pc_crash")
+    # a FRESH handle (the post-crash process) reads the post-fold view
+    # and changes nothing
+    fresh = kv_index(spark, store, name)
     assert live_rows(fresh) == before
-    assert fresh.get_sidecar(name="fold.json") is None
-    assert len(_epochs(fresh)) == n0 - 2
-    import os
+    assert fresh.get_sidecar(name="fold.json") is not None
+    assert os.path.exists(fresh._fold_tmp_path)
 
-    assert not os.path.exists(fresh._fold_tmp_path)
+    # the next write-path entry (a no-op range delete) rolls it forward
+    assert fresh.delete_range(key="no-such-key") == 0
+    _assert_fold_committed(fresh, kind, fold, target, n0)
+    assert live_rows(fresh) == before
 
-    # and a crash AFTER the deletes/rename (journal left behind, tmp
-    # gone) is recognized as completed: journal dropped, view intact
+    # a crash AFTER the deletes/rename (journal left behind, tmp gone)
+    # reads normally and is recognized as completed by the next writer
     fresh.put_sidecar(
-        {"type": "fold-intent", "fold_epochs": fold, "fold_max": hi},
+        {"type": "fold-intent", "fold_epochs": fold, "fold_max": target},
         name="fold.json",
     )
-    again = kv_index(spark, store, "pc_crash")
+    again = kv_index(spark, store, name)
     assert live_rows(again) == before
+    assert again.delete_range(key="no-such-key") == 0
     assert again.get_sidecar(name="fold.json") is None
+    assert live_rows(again) == before
+
+    # and the index keeps working end-to-end
+    again.update(kv_df(spark, [{"doc_key": "n1", "k": "q", "v": 1.0}]))
+    assert live_rows(again) == sorted(before + [("n1", "q", 1.0)])
+    assert max(_epochs(again)) > target
+
+
+def test_partial_compact_crash_rolls_forward(spark, store, monkeypatch):
+    _check_crash_rolls_forward(spark, store, monkeypatch, "partial")
+
+
+@pytest.mark.parametrize("kind", ["full", "above_top", "all_dead"])
+def test_full_compact_crash_rolls_forward(spark, store, monkeypatch, kind):
+    _check_crash_rolls_forward(spark, store, monkeypatch, kind)
+
+
+@pytest.mark.parametrize("kind", ["partial", "full"])
+def test_fold_commit_survives_racing_reader(spark, store, monkeypatch, kind):
+    """Race regression: a second handle calling read() right after the
+    fold's journal lands must neither change storage nor break the
+    writer's commit. (When readers rolled the fold forward themselves,
+    the writer then deleted the freshly renamed epoch={hi} — live rows
+    were lost and the commit died on a raw rename error.)"""
+    name = f"race_{kind}"
+    idx, fold_call = _fold_setup(spark, store, name, kind)
+    before = live_rows(idx)
+    n0 = len(_epochs(idx))
+    fold, target = _expected_fold(idx, kind)
+    reader = kv_index(spark, store, name)
+    seen = []
+    _after_journal(idx, monkeypatch, lambda: seen.append(live_rows(reader)))
+    fold_call()
+    assert seen == [before]
+    _assert_fold_committed(idx, kind, fold, target, n0)
+    assert live_rows(idx) == before
+    assert live_rows(reader) == before
 
 
 def test_partial_compact_full_equivalence_under_churn(spark, store):

@@ -981,6 +981,48 @@ def test_semdedup_pq_storage_mode(spark, store):
     assert got2_pq == got2_full
 
 
+def test_semdedup_update_failure_releases_cache(spark, store):
+    """semdedup_update caches the stored slice for its two consumers;
+    a failing update (here the PQ path's missing-vec_id refusal) must
+    still release it — no CacheManager entry outlives the call."""
+    import numpy as np
+
+    from level_mapreduce_spark.operators.similarity import (
+        build_semdedup_index,
+        semdedup_update,
+    )
+
+    rng = np.random.default_rng(19)
+    X = rng.normal(size=(40, 16))
+    src = spark.createDataFrame(
+        [(int(i), [float(v) for v in X[i]]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    cents = [[float(v) for v in c] for c in rng.normal(size=(3, 16))]
+    cents = [[v / sum(x * x for x in c) ** 0.5 for v in c] for c in cents]
+    pq = build_semdedup_index(
+        spark, src, store, name="sd_pq_leak", centroids=cents,
+        threshold=0.95, vector_storage="pq", pq_m=4, pq_k=16, pq_margin=0.6,
+    )
+    novel = [float(v) for v in rng.normal(size=16) * 4]
+    semdedup_update(
+        pq,
+        spark.createDataFrame([(101, novel)], "vec_id long, embedding array<double>"),
+        source_embeddings=src,
+    )
+    # vec 200 pairs with wave-1's 101, which src lacks -> refusal
+    spark.catalog.clearCache()
+    with pytest.raises(Exception, match="missing from source_embeddings"):
+        semdedup_update(
+            pq,
+            spark.createDataFrame(
+                [(200, novel)], "vec_id long, embedding array<double>"
+            ),
+            source_embeddings=src,
+        )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_postings_stats_model_interleavings(spark, store):
     """Seeded randomized differential for the v2 stats machinery: a
     random interleaving of overwrite batches, delete batches,

@@ -14,7 +14,7 @@ EVERY step that the index and the model agree on:
 - time travel: read(as_of_epoch=e) for every retained model snapshot,
   with snapshots retired exactly per the documented history-horizon
   rules of the three maintenance tiers (compact() full keeps
-  snapshots at the fold target; _compact_partial keeps >= hi, plus
+  snapshots at the fold target; a bounded fold keeps >= hi, plus
   < lo for a suffix fold; compact_tombstones keeps >= the max
   surviving tombstone epoch).
 
