@@ -286,6 +286,7 @@ def main() -> None:
     # against a quiet box. Capped so a persistent wave costs at most
     # 2 min of wall-clock, and the wait itself is recorded.
     quiet_wait_s = 0.0
+    after_pre_wait = None
     if burned and _snap_wavy(after, healthy):
         wait_t0 = time.time()
         quiet_streak = 0
@@ -297,6 +298,7 @@ def main() -> None:
             else:
                 quiet_streak += 1
                 if quiet_streak >= 2:
+                    after_pre_wait = after
                     after = dict(
                         snap, after_n_keys=len(key_log), quiet_waited=True
                     )
@@ -363,6 +365,10 @@ def main() -> None:
         "interference": {
             "before": before,
             "after": after,
+            # the run-end snapshot a successful quiet-wait replaced
+            **(
+                {"after_pre_wait": after_pre_wait} if after_pre_wait else {}
+            ),
             "mid": mid_snaps,
             "windows": windows,
             "healthy": healthy,

@@ -22,11 +22,15 @@ Spark design (SURVEY.md §7):
   file set; no global sort at read time).
 - **Incremental maintenance** — LSM-style: an update appends one new
   segment epoch plus per-``doc_key`` *tombstones*; a reader
-  anti-joins segments against the (small, broadcast) max-epoch
-  tombstone map. This IS the reference's meta-index delete-then-insert
-  (index.js:183-186), re-expressed so an update touches only
-  O(changed docs) data instead of rewriting the index — the property
-  that matters at 100 TB. ``compact()`` folds epochs back to one.
+  anti-joins segments against the (small, broadcast) tombstone rows
+  (a row dies iff a marker of its doc is newer). This IS the
+  reference's meta-index delete-then-insert (index.js:183-186),
+  re-expressed so an update touches only O(changed docs) data instead
+  of rewriting the index — the property that matters at 100 TB.
+  ``compact()`` folds epochs back to one.
+- **Point reads** — ``get``/``count(key)`` on a local store are a
+  driver-side pyarrow probe of the same files (row-group statistics
+  prune to the key), the LevelDB-seek equivalent with no Spark job.
 - **Emit identity** — deterministic ``(doc_key, emit_pos)`` replaces
   the reference's ``uuid()`` suffix (index.js:236), keeping multi-emit
   rows collision-free *and* testable.
@@ -1631,15 +1635,16 @@ class MapIndex:
         """The one liveness rule: rows of the segment epochs in
         ``[lo, hi]`` that survive every tombstone at or below ``hi`` —
         a row dies iff ``row.epoch < max tomb_epoch <= hi`` for its
-        doc (the per-doc max makes duplicate and superseded markers
-        inert). :meth:`read` is ``_live(hi=as_of_epoch)``; a fold of
-        ``[lo, hi]`` writes ``_live(lo, hi)`` at its target epoch.
+        doc (duplicate and superseded markers are inert). It is
+        applied as an anti-join against the raw tombstone rows on
+        ``s.epoch < t.epoch``: "some marker is newer than the row" is
+        the same test as "the newest marker is", with no per-doc max
+        aggregate (one shuffle job fewer per read). :meth:`read` is
+        ``_live(hi=as_of_epoch)``; a fold of ``[lo, hi]`` writes
+        ``_live(lo, hi)`` at its target epoch; the driver-side key
+        probe (:meth:`_probe`) applies the same rule in Arrow.
 
-        Segments come from the committed view. While a fold commit is
-        in flight (journal AND ``.fold_tmp`` present) that is every
-        ``epoch=`` dir outside the journal's ``fold_epochs`` plus the
-        folded copy read at ``fold_max`` — correct however many of the
-        commit's deletes have landed, and the reader touches nothing.
+        Segments come from the committed view (:meth:`_view`).
 
         The tombstone side is normally tiny relative to the index (one
         row per ever-changed doc since last compact), so it broadcasts
@@ -1662,14 +1667,11 @@ class MapIndex:
             tomb_epochs = [e for e in tomb_epochs if e <= hi]
         if not tomb_epochs:
             return segs.drop("epoch")
-        tombs = (
-            self.spark.read.schema(self._tombstone_schema).parquet(
-                self.tombstones_path
-            )
-            .where(F.col("epoch") <= hi if hi is not None else F.lit(True))
-            .groupBy(DOC_KEY)
-            .agg(F.max("epoch").alias("tomb_epoch"))
+        tombs = self.spark.read.schema(self._tombstone_schema).parquet(
+            self.tombstones_path
         )
+        if hi is not None:
+            tombs = tombs.where(F.col("epoch") <= hi)
         # Compare against the broadcast budget with a 4x margin: Parquet
         # compresses, and the in-memory broadcast relation can be several
         # times the on-disk bytes.
@@ -1678,10 +1680,29 @@ class MapIndex:
         live = segs.alias("s").join(
             tombs.alias("t"),
             (F.col(f"s.{DOC_KEY}") == F.col(f"t.{DOC_KEY}"))
-            & (F.col("s.epoch") < F.col("t.tomb_epoch")),
+            & (F.col("s.epoch") < F.col("t.epoch")),
             "left_anti",
         )
         return live.drop("epoch")
+
+    def _view(self) -> tuple[list[int], int | None]:
+        """The committed segment view every reader serves, as
+        ``(epochs, fold_max)``: the live ``epoch=`` dirs, and — while
+        a fold commit is in flight (journal AND ``.fold_tmp`` present)
+        — the epoch the folded copy in ``.fold_tmp`` is read at, with
+        the journal's ``fold_epochs`` left out of ``epochs``
+        (``fold_max`` is None otherwise). Correct however many of the
+        commit's deletes have landed; the reader touches nothing.
+        :meth:`_segments` and :meth:`_probe` both read exactly this."""
+        epochs = _list_epochs(self.spark, self.segments_path)
+        intent = self.get_sidecar(name=_FOLD_INTENT)
+        if intent is None:
+            return epochs, None
+        fs, tmp, _ = _hadoop_fs(self.spark, self._fold_tmp_path)
+        if not fs.exists(tmp):
+            return epochs, None  # renamed in: the listing is post-fold
+        folded = {int(e) for e in intent["fold_epochs"]}
+        return [e for e in epochs if e not in folded], int(intent["fold_max"])
 
     def _segments(self) -> DataFrame | None:
         """Segment rows (with ``epoch``) of the committed view, or None
@@ -1691,36 +1712,113 @@ class MapIndex:
         stores) buys nothing — serve paths construct several reads per
         query and the tax was the dominant serve cost in the r15
         profile."""
-        epochs = _list_epochs(self.spark, self.segments_path)
-        intent = self.get_sidecar(name=_FOLD_INTENT)
-        if intent is not None:
-            fs, tmp, _ = _hadoop_fs(self.spark, self._fold_tmp_path)
-            if not fs.exists(tmp):
-                intent = None  # renamed in: the listing is post-fold
-        if intent is None:
-            if not epochs:
-                return None
-            return self.spark.read.schema(self._storage_schema).parquet(
+        epochs, fold_max = self._view()
+        parts = []
+        if epochs:
+            segs = self.spark.read.schema(self._storage_schema).parquet(
                 self.segments_path
             )
-        folded = [int(e) for e in intent["fold_epochs"]]
-        view = (
-            self.spark.read.schema(
-                T.StructType(
-                    [f for f in self._storage_schema if f.name != "epoch"]
+            if fold_max is not None:
+                segs = segs.where(F.col("epoch").isin(epochs))
+            parts.append(segs)
+        if fold_max is not None:
+            parts.append(
+                self.spark.read.schema(
+                    T.StructType(
+                        [f for f in self._storage_schema if f.name != "epoch"]
+                    )
                 )
+                .parquet(self._fold_tmp_path)
+                .withColumn("epoch", F.lit(fold_max))
             )
-            .parquet(self._fold_tmp_path)
-            .withColumn("epoch", F.lit(int(intent["fold_max"])))
+        return functools.reduce(DataFrame.unionByName, parts) if parts else None
+
+    def _local_root(self) -> str | None:
+        """POSIX path of :attr:`root` when the store resolves to the
+        driver's local filesystem (scheme ``file``), else None."""
+        fs, hpath, _ = _hadoop_fs(self.spark, self.root)
+        if _resolved_scheme(fs, hpath) != "file":
+            return None
+        return fs.makeQualified(hpath).toUri().getPath()
+
+    def _probe(self, key: str):
+        """Driver-side key probe: the live rows under exactly ``key``
+        as an Arrow table ``(index_key, emit_pos, value, doc_key)``
+        sorted by ``(doc_key, emit_pos)``, read with pyarrow from the
+        Parquet files of the committed view — no Spark job. Row-group
+        min/max statistics of the range-partitioned layout prune the
+        read to the key's row groups, and tombstones are read only
+        for the matched docs. Applies :meth:`_live`'s rule: a row
+        dies iff some marker of its doc is newer than its epoch.
+
+        Returns None when the store is not local, or when a file
+        vanished mid-probe (another process's fold commit); the
+        caller then answers from the Spark path. Memory is the answer
+        plus the pruned row groups — :meth:`get` materializes the
+        whole answer on the driver anyway."""
+        root = self._local_root()
+        if root is None:
+            return None
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        epochs, fold_max = self._view()
+        seg_root = posixpath.join(root, _SEGMENTS)
+        dirs = [(posixpath.join(seg_root, f"epoch={e}"), e) for e in epochs]
+        if fold_max is not None:
+            dirs.append((posixpath.join(seg_root, ".fold_tmp"), fold_max))
+        schema = to_arrow_schema(
+            T.StructType([f for f in self._storage_schema if f.name != "epoch"])
         )
-        if any(e not in folded for e in epochs):
-            rest = (
-                self.spark.read.schema(self._storage_schema)
-                .parquet(self.segments_path)
-                .where(~F.col("epoch").isin(folded))
-            )
-            view = rest.unionByName(view)
-        return view
+        # Spark writes timestamps as INT96: read them at Spark's
+        # microsecond unit (nanoseconds overflow outside 1677-2262);
+        # the cast below lines them and the nullability up with what
+        # collect() decodes
+        fmt = ds.ParquetFileFormat(
+            read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+        )
+        hit = ds.field("index_key") == key
+        tomb_root = posixpath.join(root, _TOMBSTONES)
+        try:
+            # list every file before reading any: a fold commit that
+            # renames its copy in between then fails the read of the
+            # deleted originals instead of double-counting
+            sets = [(ds.dataset(d, format=fmt), e) for d, e in dirs]
+            parts = [
+                (s.to_table(columns=schema.names, filter=hit).cast(schema), e)
+                for s, e in sets
+                if s.files
+            ]
+            docs = {d for t, _ in parts for d in t[DOC_KEY].to_pylist()}
+            newest = {}
+            if docs and os.path.isdir(tomb_root):
+                by_doc = (
+                    ds.dataset(
+                        tomb_root,
+                        schema=pa.schema(
+                            [(DOC_KEY, pa.string()), ("epoch", pa.int32())]
+                        ),
+                        format="parquet",
+                        partitioning="hive",
+                    )
+                    .to_table(filter=ds.field(DOC_KEY).isin(sorted(docs)))
+                    .group_by(DOC_KEY)
+                    .aggregate([("epoch", "max")])
+                )
+                newest = dict(
+                    zip(by_doc[DOC_KEY].to_pylist(), by_doc["epoch_max"].to_pylist())
+                )
+        except FileNotFoundError:
+            return None
+        live = [schema.empty_table()]
+        for t, e in parts:
+            dead = pa.array([d for d, m in newest.items() if m > e], pa.string())
+            live.append(t.filter(pc.invert(pc.is_in(t[DOC_KEY], value_set=dead))))
+        return pa.concat_tables(live).sort_by(
+            [(DOC_KEY, "ascending"), ("emit_pos", "ascending")]
+        )
 
     def scan(
         self,
@@ -1798,6 +1896,8 @@ class MapIndex:
         return df
 
     def get_df(self, key: str) -> DataFrame:
+        """DataFrame form of :meth:`get`: the ``value`` column of the
+        rows under ``key``, ordered by ``(doc_key, emit_pos)``."""
         return (
             self.scan(key=key)
             .orderBy(DOC_KEY, "emit_pos")
@@ -1808,15 +1908,46 @@ class MapIndex:
         """All values emitted under exactly ``key`` (reference get,
         index.js:151-172), ordered by ``(doc_key, emit_pos)`` — the
         deterministic stand-in for uuid-insertion order (SURVEY.md
-        §7.3 hard part 2). Driver-side collect by design: this is the
-        point-lookup API, not a bulk path.
+        §7.3 hard part 2). Driver-side by design: this is the
+        point-lookup API, not a bulk path (:meth:`get_df` is the
+        DataFrame form).
+
+        A local store answers from the driver-side key probe
+        (:meth:`_probe`) with no Spark job; values decode exactly as
+        ``collect()`` does them (struct -> Row, map -> dict). Other
+        stores, or a probe that lost a race with a fold commit,
+        collect the Spark scan and sort its few rows in Python
+        (code-point order = Spark's UTF-8 byte order).
         """
-        return [r["value"] for r in self.get_df(key).collect()]
+        rows = self._probe(key)
+        if rows is None:
+            got = self.scan(key=key).select(DOC_KEY, "emit_pos", "value")
+            return [
+                r["value"]
+                for r in sorted(
+                    got.collect(), key=lambda r: (r[DOC_KEY], r["emit_pos"])
+                )
+            ]
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+        return [
+            v
+            for (v,) in ArrowTableToRowsConversion.convert(
+                rows.select(["value"]),
+                T.StructType([self._storage_schema["value"]]),
+                return_as_tuples=True,
+            )
+        ]
 
     def count(self, key: str | None = None) -> int:
         """The reference's declared-but-empty ``count`` stub
-        (index.js:148-150), implemented."""
-        return self.scan(key=key).count()
+        (index.js:148-150), implemented. ``count(key)`` on a local
+        store is the driver-side key probe's row count (no Spark
+        job), as in :meth:`get`."""
+        rows = None if key is None else self._probe(key)
+        if rows is None:
+            return self.scan(key=key).count()
+        return rows.num_rows
 
     def get_meta(self, doc_key: str) -> list[str]:
         """The keys a document currently emits — reference ``getMeta``'s
@@ -2021,22 +2152,23 @@ class MapIndex:
     @_writer
     def compact_tombstones(self) -> int:
         """Drop superseded tombstone markers WITHOUT touching any
-        segment: only a doc's max-epoch tombstone has any effect
-        (read() applies the per-doc max), so every (doc, T) row with
-        a higher-T marker elsewhere is pure debris. Under churn that
-        re-touches the same documents, this reclaims most tombstone
-        bytes and empties old tombstone epoch dirs at O(tombstones)
-        cost — the third maintenance tier between "do nothing" and a
-        segment fold. Returns the number of epoch dirs emptied.
+        segment: only a doc's max-epoch tombstone has any effect (a
+        row dies iff some marker of its doc is newer), so every (doc,
+        T) row with a higher-T marker elsewhere is pure debris. Under
+        churn that re-touches the same documents, this reclaims most
+        tombstone bytes and empties old tombstone epoch dirs at
+        O(tombstones) cost — the third maintenance tier between "do
+        nothing" and a segment fold. Returns the number of epoch dirs emptied.
 
         Crash-safe WITHOUT a journal, by construction: the surviving
         rows of every epoch are APPENDED as new files into their own
         epoch dirs first (one Spark job), and only then are the
         pre-listed original files deleted. A crash at any point
         leaves either duplicate live markers (harmless — the read
-        path aggregates per-doc max, so duplicates are idempotent)
-        or partially-deleted superseded rows (harmless — superseded
-        by definition). Concurrent readers see the same states.
+        path only asks whether SOME marker is newer, so duplicates
+        are idempotent) or partially-deleted superseded rows
+        (harmless — superseded by definition). Concurrent readers see
+        the same states.
 
         Time travel: a snapshot between a doc's superseded marker and
         its surviving one stops observing the older delete — the

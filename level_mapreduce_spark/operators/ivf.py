@@ -41,16 +41,15 @@ def train_sample(embeddings: DataFrame, max_train: int, seed: int):
     corpus scan per composite build when the source carries
     transformations). Deterministic in (vec_id set, seed); a corpus
     smaller than ``max_train`` contributes every row, so small gate
-    corpora can never starve the trainer."""
+    corpora can never starve the trainer. The hash and the tie-break
+    both take vec_id as it is: any orderable id type works (a cast to
+    long would turn string ids into NULL and every row would hash
+    alike)."""
     import numpy as np
 
     sample = (
-        embeddings.select(
-            F.col("vec_id").cast("long").alias("vec_id"), "embedding"
-        )
-        .orderBy(
-            F.xxhash64(F.col("vec_id"), F.lit(int(seed))), "vec_id"
-        )
+        embeddings.select("vec_id", "embedding")
+        .orderBy(F.xxhash64(F.col("vec_id"), F.lit(int(seed))), "vec_id")
         .limit(max_train)
         .select("embedding")
         .collect()
@@ -70,8 +69,9 @@ def train_centroids(
     """k-means codebook.
 
     ``trainer="sample"`` (default, deterministic): numpy Lloyd
-    iterations on a bounded driver-side sample, init = first k sample
-    rows by vec_id — bit-stable across runs for a fixed seed, which is
+    iterations on the bounded driver-side :func:`train_sample`, init =
+    its first k rows (the seeded-hash order, ties by vec_id) —
+    bit-stable across runs for a fixed seed, which is
     what the oracle gate and the stored-index sidecars rely on.
     ``trainer="mllib"``: distributed kmeans|| (Bahmani et al.,
     VLDB'12) over the FULL corpus via ``pyspark.ml.clustering.KMeans``

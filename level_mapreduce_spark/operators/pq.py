@@ -48,8 +48,8 @@ def train_pq(
     """Per-subspace k-means codebooks, shape (m, k, dim/m).
 
     ``trainer="sample"`` (default, deterministic): numpy Lloyd
-    iterations on a bounded driver-side sample, init = first k sample
-    rows by vec_id (same scheme as ``ivf.train_centroids``) —
+    iterations on the bounded driver-side ``ivf.train_sample``, init =
+    its first k rows (same scheme as ``ivf.train_centroids``) —
     bit-stable for a fixed seed, which the oracle gate and sidecar
     round-trips rely on. ``trainer="mllib"``: per-subspace distributed
     kmeans|| over the FULL corpus (``pyspark.ml.clustering.KMeans``,

@@ -778,6 +778,69 @@ def test_partial_compact_crash_rolls_forward(spark, store, monkeypatch):
     _check_crash_rolls_forward(spark, store, monkeypatch, "partial")
 
 
+_PROBE_KEYS = ["a", "b", "c", "z", "no-such-key"]
+
+
+def _point_reads(idx):
+    return {k: (idx.get(k), idx.count(k)) for k in _PROBE_KEYS}
+
+
+@pytest.mark.parametrize("kind", ["partial", "full"])
+def test_probe_serves_fold_in_flight(spark, store, monkeypatch, kind):
+    """A compact() crashed right after its journal landed (and after
+    one of its deletes): a fresh handle's get()/count(key) answer from
+    the driver-side probe over the post-fold view with the pre-crash
+    values, and leave fold.json and .fold_tmp in place."""
+    name = f"probe_crash_{kind}"
+    idx, fold_call = _fold_setup(spark, store, name, kind)
+    before = _point_reads(idx)
+    assert before["z"][1] > 0
+    fold, _ = _expected_fold(idx, kind)
+    _after_journal(idx, monkeypatch, _crash)
+    with pytest.raises(_Crash):
+        fold_call()
+    import shutil
+
+    shutil.rmtree(os.path.join(idx.segments_path, f"epoch={fold[0]}"))
+
+    fresh = kv_index(spark, store, name)
+    monkeypatch.setattr(
+        fresh, "scan", lambda *a, **k: pytest.fail("Spark path used")
+    )
+    assert _point_reads(fresh) == before
+    assert fresh.get_sidecar(name="fold.json") is not None
+    assert os.path.exists(fresh._fold_tmp_path)
+
+
+def test_probe_file_vanished_falls_back_to_spark(spark, store, monkeypatch):
+    """A file that disappears under the probe (another process's fold
+    commit) sends get()/count(key) to the Spark path once — no retry
+    loop — with the same answer; the next call probes again."""
+    import pyarrow.dataset as ds
+
+    idx, _ = _churned_index(spark, store, "probe_vanish")
+    want = _point_reads(idx)
+    real_dataset, real_scan = ds.dataset, idx.scan
+    vanished, scans = [], []
+
+    def dataset_vanishing_once(*a, **k):
+        if not vanished:
+            vanished.append(a)
+            raise FileNotFoundError(a[0])
+        return real_dataset(*a, **k)
+
+    def spy_scan(*a, **k):
+        scans.append(k)
+        return real_scan(*a, **k)
+
+    monkeypatch.setattr(ds, "dataset", dataset_vanishing_once)
+    monkeypatch.setattr(idx, "scan", spy_scan)
+    assert idx.get("z") == want["z"][0]
+    assert len(vanished) == 1 and scans == [{"key": "z"}]
+    assert _point_reads(idx) == want
+    assert len(scans) == 1
+
+
 @pytest.mark.parametrize("kind", ["full", "above_top", "all_dead"])
 def test_full_compact_crash_rolls_forward(spark, store, monkeypatch, kind):
     _check_crash_rolls_forward(spark, store, monkeypatch, kind)

@@ -2,8 +2,11 @@
 (FIXTURES.md §A.3; reference tests/test-basic.js, tests/test-replication.js).
 """
 
+import datetime as dt
 import json
+from decimal import Decimal
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -524,3 +527,110 @@ def test_list_indexes_catalog(spark, store):
         }["cat_a"] is True
     finally:
         a._release_lease()
+
+
+# Value types the driver-side key probe must decode exactly as
+# collect() does: DDL type and four values (d1..d4; d4 is the all-
+# tombstoned doc, d1 is overwritten with the d4 value).
+_PROBE_TYPES = {
+    "long": ("bigint", [1, -5, 2**40, None]),
+    "double": ("double", [1.5, -0.25, 3.0, None]),
+    "string": ("string", ["a", "é", "", None]),
+    "struct": ("struct<a:int,b:string>", [(1, "x"), (None, "y"), (3, None), None]),
+    "array": ("array<int>", [[1, 2], [], [None, 3], None]),
+    "map": ("map<string,int>", [{"a": 1}, {}, {"b": None}, None]),
+    # 2300 lies past the nanosecond range INT96 files are read at by default
+    "timestamp": (
+        "timestamp",
+        [dt.datetime(2020, 1, 1, 12, 0, 0, 123456), dt.datetime(1969, 12, 31, 23, 59, 59),
+         dt.datetime(2300, 7, 4, 9, 15), None],
+    ),
+    "date": ("date", [dt.date(2020, 1, 2), dt.date(1900, 1, 1), dt.date(2038, 1, 19), None]),
+    "decimal": ("decimal(10,2)", [Decimal("12.34"), Decimal("-0.01"), Decimal("99999999.99"), None]),
+    "binary": ("binary", [bytearray(b"\x00\x01"), bytearray(b""), bytearray(b"\xff"), None]),
+    "nested": (
+        "struct<xs:array<struct<p:int,q:string>>,m:map<string,array<int>>>",
+        [([(1, "p"), (2, None)], {"a": [1, 2]}), ([], {}), (None, {"b": None}), None],
+    ),
+}
+_PROBE_KEYS = ("k", "other", "gone", "missing")
+
+
+def _probe_index(spark, store, kind):
+    """An index of value type ``kind`` after one build and one update:
+    key ``k`` spans three docs (one overwritten, one added), ``other``
+    one doc, ``gone`` only an all-tombstoned doc."""
+    ddl, (v1, v2, v3, v4) = _PROBE_TYPES[kind]
+    schema = f"doc_key string, k string, v {ddl}, deleted boolean"
+    docs = spark.createDataFrame(
+        [("d1", "k", v1, False), ("d2", "k", v2, False),
+         ("d3", "other", v3, False), ("d4", "gone", v4, False)],
+        schema,
+    )
+    mapper = ExprMapper.of(
+        (F.col("k"), F.col("v")), value_type=docs.schema["v"].dataType
+    )
+    idx = MapIndex(spark, f"probe_{kind}", mapper, store)
+    idx.build(docs, assume_unique=True)
+    idx.update(
+        spark.createDataFrame(
+            [("d1", "k", v4, False), ("d4", None, None, True), ("d0", "k", v3, False)],
+            schema,
+        ),
+        assume_unique=True,
+    )
+    return idx
+
+
+def _spark_answers(idx):
+    return {
+        key: ([r["value"] for r in idx.get_df(key).collect()], idx.get_df(key).count())
+        for key in _PROBE_KEYS
+    }
+
+
+@pytest.mark.parametrize("kind", sorted(_PROBE_TYPES))
+def test_get_probe_equals_spark(spark, store, kind):
+    """get()/count(key) on a local store come from the driver-side key
+    probe; for every value type they equal the Spark DataFrame form
+    (get_df), including a missing key and an all-tombstoned key."""
+    idx = _probe_index(spark, store, kind)
+    want = _spark_answers(idx)
+    assert want["k"][1] == 3 and want["gone"] == ([], 0)
+    assert all(idx._probe(key) is not None for key in _PROBE_KEYS)
+    assert {key: (idx.get(key), idx.count(key)) for key in _PROBE_KEYS} == want
+
+
+def test_get_probe_timestamps_in_local_zone(spark, store, monkeypatch):
+    """Probed timestamps decode to the driver's local wall-clock time,
+    as collect() does, whatever the process time zone."""
+    import time
+
+    idx = _probe_index(spark, store, "timestamp")
+    try:
+        for tz in ("UTC", "America/New_York"):
+            monkeypatch.setenv("TZ", tz)
+            time.tzset()
+            assert {key: idx.get(key) for key in _PROBE_KEYS} == {
+                key: got for key, (got, _) in _spark_answers(idx).items()
+            }
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+@pytest.mark.parametrize("kind", ["nested", "timestamp"])
+def test_get_spark_fallback_equals_probe(spark, store, monkeypatch, kind):
+    """A store that does not resolve to the local filesystem answers
+    get()/count(key) from the Spark path, with the probe's answers."""
+    idx = _probe_index(spark, store, kind)
+    probed = {key: (idx.get(key), idx.count(key)) for key in _PROBE_KEYS}
+    monkeypatch.setattr(MapIndex, "_local_root", lambda self: None)
+    assert {key: (idx.get(key), idx.count(key)) for key in _PROBE_KEYS} == probed
+
+
+def test_get_probe_empty_index(spark, store):
+    """Never built: no segments dir, the probe answers empty."""
+    idx = make_index(spark, store, name="never_built")
+    assert idx.get("test") == [] and idx.count("test") == 0
+    assert idx.get_df("test").count() == 0

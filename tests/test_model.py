@@ -135,6 +135,7 @@ def _check_current(rng, idx, model):
         if k == key
     ]
     assert idx.get(key) == expect
+    assert [r["value"] for r in idx.get_df(key).collect()] == expect
     assert idx.count(key) == len(expect)
     if model:
         d = rng.choice(sorted(model))

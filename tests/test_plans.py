@@ -71,6 +71,30 @@ def test_tombstone_antijoin_broadcasts(spark):
     plan = plan_of(idx.read())
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     assert "SortMergeJoin" not in plan
+    # the anti-join reads the raw tombstone rows: no per-doc max
+    # aggregate (and no shuffle job for it) on the read path
+    assert "HashAggregate" not in plan
+
+
+def test_point_reads_run_no_spark_job(spark):
+    """get()/count(key) on a local store answer from the driver-side
+    key probe: no Spark job starts, and the answers equal the Spark
+    DataFrame form — for a live key, one whose docs were partly
+    tombstoned, and a range-deleted key."""
+    idx = q._tombstone_index(spark, SF_DIR)
+    keys = ["1-URGENT", "2-HIGH", "4-NOT SPECIFIED"]
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    got = {k: (idx.get(k), idx.count(k)) for k in keys}
+    assert set(tracker.getJobIdsForGroup()) == before
+    want = {
+        k: ([r["value"] for r in idx.get_df(k).collect()], idx.get_df(k).count())
+        for k in keys
+    }
+    # the tracker does see the Spark form's jobs
+    assert set(tracker.getJobIdsForGroup()) - before
+    assert got == want
+    assert want["1-URGENT"][1] > 0 and want["4-NOT SPECIFIED"] == ([], 0)
 
 
 def test_scan_limit_plans_topk(spark):
