@@ -1782,10 +1782,23 @@ class MapIndex:
         hit = ds.field("index_key") == key
         tomb_root = posixpath.join(root, _TOMBSTONES)
         try:
-            # list every file before reading any: a fold commit that
-            # renames its copy in between then fails the read of the
-            # deleted originals instead of double-counting
+            # list every segment AND tombstone file before reading any:
+            # a fold commit (or build overwrite) in between then fails
+            # the read of a deleted original or swept marker instead of
+            # double-counting or resurrecting rows
             sets = [(ds.dataset(d, format=fmt), e) for d, e in dirs]
+            tombs = (
+                ds.dataset(
+                    tomb_root,
+                    schema=pa.schema(
+                        [(DOC_KEY, pa.string()), ("epoch", pa.int32())]
+                    ),
+                    format="parquet",
+                    partitioning="hive",
+                )
+                if os.path.isdir(tomb_root)
+                else None
+            )
             parts = [
                 (s.to_table(columns=schema.names, filter=hit).cast(schema), e)
                 for s, e in sets
@@ -1793,17 +1806,9 @@ class MapIndex:
             ]
             docs = {d for t, _ in parts for d in t[DOC_KEY].to_pylist()}
             newest = {}
-            if docs and os.path.isdir(tomb_root):
+            if docs and tombs is not None:
                 by_doc = (
-                    ds.dataset(
-                        tomb_root,
-                        schema=pa.schema(
-                            [(DOC_KEY, pa.string()), ("epoch", pa.int32())]
-                        ),
-                        format="parquet",
-                        partitioning="hive",
-                    )
-                    .to_table(filter=ds.field(DOC_KEY).isin(sorted(docs)))
+                    tombs.to_table(filter=ds.field(DOC_KEY).isin(sorted(docs)))
                     .group_by(DOC_KEY)
                     .aggregate([("epoch", "max")])
                 )
@@ -1916,18 +1921,11 @@ class MapIndex:
         (:meth:`_probe`) with no Spark job; values decode exactly as
         ``collect()`` does them (struct -> Row, map -> dict). Other
         stores, or a probe that lost a race with a fold commit,
-        collect the Spark scan and sort its few rows in Python
-        (code-point order = Spark's UTF-8 byte order).
+        collect :meth:`get_df`.
         """
         rows = self._probe(key)
         if rows is None:
-            got = self.scan(key=key).select(DOC_KEY, "emit_pos", "value")
-            return [
-                r["value"]
-                for r in sorted(
-                    got.collect(), key=lambda r: (r[DOC_KEY], r["emit_pos"])
-                )
-            ]
+            return [r["value"] for r in self.get_df(key).collect()]
         from pyspark.sql.conversion import ArrowTableToRowsConversion
 
         return [

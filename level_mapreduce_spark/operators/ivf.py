@@ -41,15 +41,16 @@ def train_sample(embeddings: DataFrame, max_train: int, seed: int):
     corpus scan per composite build when the source carries
     transformations). Deterministic in (vec_id set, seed); a corpus
     smaller than ``max_train`` contributes every row, so small gate
-    corpora can never starve the trainer. The hash and the tie-break
-    both take vec_id as it is: any orderable id type works (a cast to
-    long would turn string ids into NULL and every row would hash
-    alike)."""
+    corpora can never starve the trainer."""
     import numpy as np
 
     sample = (
-        embeddings.select("vec_id", "embedding")
-        .orderBy(F.xxhash64(F.col("vec_id"), F.lit(int(seed))), "vec_id")
+        embeddings.select(
+            F.col("vec_id").cast("long").alias("vec_id"), "embedding"
+        )
+        .orderBy(
+            F.xxhash64(F.col("vec_id"), F.lit(int(seed))), "vec_id"
+        )
         .limit(max_train)
         .select("embedding")
         .collect()

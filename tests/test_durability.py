@@ -841,6 +841,52 @@ def test_probe_file_vanished_falls_back_to_spark(spark, store, monkeypatch):
     assert len(scans) == 1
 
 
+def test_probe_racing_fold_commit_never_resurrects(spark, store, monkeypatch):
+    """Another handle's full compact() commits — folded epochs deleted,
+    the copy renamed in, every tombstone swept — after the probe has
+    read the segment rows and before it reads the tombstones. Pairing
+    the pre-fold rows with the post-sweep tombstone root would bring
+    the overwritten and deleted docs back; the probe listed the swept
+    markers with the segments, so their read fails and get() answers
+    from the Spark path with the pre-fold values."""
+    import pyarrow.dataset as ds
+
+    idx, _ = _churned_index(spark, store, "probe_race")
+    want = _point_reads(idx)
+    assert want["a"][0] == [0.0]
+    n_segs = len(_epochs(idx))
+    real_dataset = ds.dataset
+    seg_reads, folds = [], []
+
+    class FoldAfterLastSegmentRead:
+        def __init__(self, inner):
+            self.inner = inner
+
+        def __getattr__(self, attr):
+            return getattr(self.inner, attr)
+
+        def to_table(self, *a, **k):
+            table = self.inner.to_table(*a, **k)
+            seg_reads.append(1)
+            if len(seg_reads) == n_segs and not folds:
+                other = kv_index(spark, store, "probe_race")
+                other.compact()
+                folds.append(_epochs(other))
+            return table
+
+    def racing_dataset(path, *a, **k):
+        got = real_dataset(path, *a, **k)
+        if f"{os.sep}segments{os.sep}" in str(path):
+            return FoldAfterLastSegmentRead(got)
+        return got
+
+    monkeypatch.setattr(ds, "dataset", racing_dataset)
+    # "a": d3 was deleted and d6 overwritten; both would come back
+    assert idx.get("a") == want["a"][0]
+    assert folds == [_epochs(idx)] and len(folds[0]) == 1
+    assert _tomb_epochs(idx) == []
+
+
 @pytest.mark.parametrize("kind", ["full", "above_top", "all_dead"])
 def test_full_compact_crash_rolls_forward(spark, store, monkeypatch, kind):
     _check_crash_rolls_forward(spark, store, monkeypatch, kind)

@@ -619,21 +619,3 @@ def test_pq_topk_deterministic_under_adc_ties(spark, pq_setup):
     # ties broken low-id first: original id 0 leads its clone block
     assert runs[0][0] == int(ids[0])
     assert runs[0] == sorted(runs[0], )
-
-
-def test_train_sample_string_ids(spark):
-    """train_sample hashes vec_id as it is: string ids draw a
-    deterministic sample whatever the partitioning, and different ids
-    give a different order. (A cast to long made every string id
-    NULL, every row hashed alike, and the draw followed scan order.)"""
-    from level_mapreduce_spark.operators.ivf import train_sample
-
-    schema = "vec_id string, embedding array<double>"
-    rows = [(f"v{i:03d}", [float(i), 0.0]) for i in range(40)]
-    emb = spark.createDataFrame(rows, schema)
-    a = train_sample(emb, 10, seed=7)
-    assert a.shape == (10, 2)
-    assert (train_sample(emb.repartition(3), 10, seed=7) == a).all()
-    renamed = spark.createDataFrame([("w" + v[1:], e) for v, e in rows], schema)
-    assert list(train_sample(renamed, 10, seed=7)[:, 0]) != list(a[:, 0])
-    assert list(a[:, 0]) != [float(i) for i in range(10)]
