@@ -61,14 +61,6 @@ from level_mapreduce_spark.engine.query import Query, _contains_map
 
 _SEGMENTS = "segments"
 _TOMBSTONES = "tombstones"
-# staging area for intra-call scratch parquet (delete_range's doomed
-# key set): a NON-data sibling of segments/tombstones whose "_" prefix
-# Hadoop's default PathFilter also hides, so a reader listing the
-# index root can never ingest scratch and Spark logs no ignored-path
-# WARN about it. compact() janitor-sweeps crash orphans here — but
-# only at lease depth 1 (a reentrant fold inside delete_range may
-# still have live readers on it; ADVICE r11 high).
-_SCRATCH = "_scratch"
 # compact()'s commit journal, a sidecar beside segments/ (see
 # MapIndex._recover_fold)
 _FOLD_INTENT = "fold.json"
@@ -1134,8 +1126,42 @@ class MapIndex:
             .drop("_rn")
         )
 
-    def _emits(self, live_docs: DataFrame) -> DataFrame:
-        """(index_key, emit_pos, value, doc_key) — the UDTF explode.
+    def _stage(self, changes: DataFrame) -> DataFrame:
+        """The batch's one evaluation: ``(doc_key, pairs)`` per changed
+        doc, ``pairs = []`` for deleted docs, pinned by an eager
+        ``localCheckpoint`` (MEMORY_AND_DISK, bounded by the batch).
+
+        The segment, the tombstones and the downstream feed all read
+        this stage, so ``changes`` and the map fn run once per update,
+        before any write. The pin's plan references no storage path,
+        so the writes' recacheByPath/refreshByPath cannot re-compute
+        it against the post-write listing (a ``persist()`` of a plan
+        that scans this index's own files would be).
+        """
+        self._storage_schema  # typed refusal for sidecar-only probes
+        # the live/deleted split prunes the two branches' columns
+        # differently, so they share no exchange: a lazy pin makes the
+        # stage's one job compute each ``changes`` partition once
+        changes = changes.localCheckpoint(eager=False)
+        live = self.mapper.pairs(
+            changes.where(~F.col("deleted")), doc_key=DOC_KEY
+        )
+        dead = changes.where(F.col("deleted")).select(
+            DOC_KEY, self._no_pairs.alias("pairs")
+        )
+        # the union doubles the partition count; narrowing it back keeps
+        # one tombstone file per batch partition, not one per branch
+        n = max(1, changes.rdd.getNumPartitions())
+        return live.unionByName(dead).coalesce(n).localCheckpoint(eager=True)
+
+    @property
+    def _no_pairs(self):
+        return F.array().cast(pairs_type(self.mapper.value_type))
+
+    @staticmethod
+    def _explode(pairs: DataFrame) -> DataFrame:
+        """(index_key, emit_pos, value, doc_key) — the UDTF explode of
+        mapper output ``(doc_key, pairs)``.
 
         ``posexplode_outer`` + null-key filter is the multi-emit
         flatten (reference index.js:233-240); docs mapping to zero
@@ -1154,8 +1180,6 @@ class MapIndex:
         explode, so the mapper expression stays exactly where the
         staged plan put it.
         """
-        self._storage_schema  # typed refusal for sidecar-only probes
-        pairs = self.mapper.pairs(live_docs, doc_key=DOC_KEY)
         return (
             pairs.select(
                 DOC_KEY, F.posexplode_outer("pairs").alias("emit_pos", "pair")
@@ -1170,24 +1194,29 @@ class MapIndex:
         )
 
     def _write_segment(self, emits: DataFrame, epoch: int, mode: str) -> None:
-        # repartitionByRange runs a RangePartitioner SAMPLING job that
-        # evaluates the full upstream (the user map fn) once, and the
-        # write evaluates it again — persist the emits so the mapper
-        # runs once per build/update, not twice. MEMORY_AND_DISK: at
-        # scale a spill-read is still cheaper than re-running an
-        # expression-heavy map fn over the corpus.
-        emits = emits.persist()
-        try:
-            (
-                emits.withColumn("epoch", F.lit(epoch).cast("int"))
-                .repartitionByRange("index_key", DOC_KEY)
-                .sortWithinPartitions("index_key", DOC_KEY, "emit_pos")
-                .write.mode(mode)
-                .partitionBy("epoch")
-                .parquet(self.segments_path)
-            )
-        finally:
-            emits.unpersist()
+        # repartitionByRange runs a RangePartitioner SAMPLING job over
+        # ``emits`` and the write evaluates it again: callers hand in a
+        # pinned frame so the map fn runs once
+        (
+            emits.withColumn("epoch", F.lit(epoch).cast("int"))
+            .repartitionByRange("index_key", DOC_KEY)
+            .sortWithinPartitions("index_key", DOC_KEY, "emit_pos")
+            .write.mode(mode)
+            .partitionBy("epoch")
+            .parquet(self.segments_path)
+        )
+
+    def _write_tombstones(self, doc_keys: DataFrame, epoch: int) -> None:
+        # duplicate markers are inert (see _live), so no distinct();
+        # the in-partition sort keeps the files as compact as sorted keys
+        (
+            doc_keys.withColumn("epoch", F.lit(epoch).cast("int"))
+            .sortWithinPartitions(DOC_KEY)
+            .write.mode("append")
+            .partitionBy("epoch")
+            .parquet(self.tombstones_path)
+        )
+        self._tomb_bytes_cache = None
 
     # --------------------------------------------------------------- build
 
@@ -1210,15 +1239,24 @@ class MapIndex:
         tombstones) builds at epoch 0 as before; a rebuild resets the
         time-travel horizon either way (full rematerialization).
         """
+        self._storage_schema  # typed refusal for sidecar-only probes
         changes = self._normalize_changes(docs, assume_unique=assume_unique)
-        live = changes.where(~F.col("deleted"))
-        emits = self._emits(live)
+        emits = self._explode(
+            self.mapper.pairs(changes.where(~F.col("deleted")), doc_key=DOC_KEY)
+        )
         build_epoch = (
             self._next_epoch()
             if _list_epochs(self.spark, self.tombstones_path)
             else 0
         )
-        self._write_segment(emits, epoch=build_epoch, mode="overwrite")
+        # corpus-sized, so persisted (MEMORY_AND_DISK) rather than
+        # checkpointed: at scale a spill-read is still cheaper than
+        # re-running an expression-heavy map fn over the corpus
+        emits = emits.persist()
+        try:
+            self._write_segment(emits, epoch=build_epoch, mode="overwrite")
+        finally:
+            emits.unpersist()
         _delete_path(self.spark, self.tombstones_path)
         # a full rebuild supersedes any crashed partial-fold journal
         self._clear_fold_intent()
@@ -1226,17 +1264,9 @@ class MapIndex:
         self._seg_bytes_by_epoch.clear()
         self.compaction_due = False
         if self._downstreams:
-            # Full-rebuild feed = the stored documents as-is. update()
-            # must feed every CHANGED key (empty-emit/tombstoned docs
-            # as (doc_key, value=[], deleted=false) so the downstream
-            # tombstones its prior emits), but a downstream BUILD is a
-            # from-scratch overwrite: empty-value rows emit zero index
-            # rows either way, so the input-key-set join of
-            # changes_feed() added a full re-derivation of the input
-            # plus a distinct + two joins for rows that cannot affect
-            # the result (r16, guide §2.4 — the converged state is
-            # identical, FIXTURES.md A.3's incremental == rebuild
-            # invariant holds unchanged).
+            # Full-rebuild feed = the stored documents as-is: a
+            # downstream BUILD is a from-scratch overwrite, and a doc
+            # with no live emits would emit nothing there either way.
             feed = self.as_documents()
             for down in self._downstreams:
                 down.build(feed, assume_unique=True)
@@ -1280,45 +1310,40 @@ class MapIndex:
         Returns the downstream change feed ``(doc_key, value, deleted)``
         where ``value`` is the doc's full live emit list — the shape
         the reference pushes to piped indexes (index.js:244, 250-253).
+        It comes from the batch's own stage, not a read-back: after
+        the same-epoch tombstone a changed doc's live emits are
+        exactly its staged pairs, in ``emit_pos`` order (``[]`` for a
+        deleted or empty-emit doc, which the downstream map fn sees —
+        reference index.js:190, 201, 223).
 
-        Evaluation contract: ``changes`` is a lazy plan evaluated
-        independently for the segment write, the tombstone write, and
-        (when piped) the downstream feed — the later evaluations run
-        AFTER this index's files have changed, and Spark refreshes
-        path listings on every write. A ``changes`` plan that reads
-        THIS index's own storage therefore re-observes its own
-        partial effects; that is safe iff its doc-KEY set is
-        write-invariant (true for the stored-sketch fold, whose keys
-        are the batch's bucket keys either way — operators/
-        sketches.py), never for value-dependent membership. External
-        callers should feed deterministic, non-self-referential plans;
-        :meth:`delete_range` stages its self-referential key set to a
-        scratch file for exactly this reason.
+        ``changes`` is evaluated once, into the stage, before any write.
         """
         self._recover_fold()
         epoch = self._next_epoch()
-        changes = self._normalize_changes(changes, assume_unique=assume_unique)
-
-        live = changes.where(~F.col("deleted"))
-        emits = self._emits(live)
-        self._write_segment(emits, epoch=epoch, mode="append")
-
+        stage = self._stage(
+            self._normalize_changes(changes, assume_unique=assume_unique)
+        )
+        self._write_segment(self._explode(stage), epoch=epoch, mode="append")
         # Tombstone at the SAME epoch: read() keeps seg.epoch >= tomb_epoch,
         # so this kills every prior emit while keeping the batch just written.
-        # distinct() already shuffled, so AQE has right-sized the output
-        # partitions (1 file at small scale, parallel at 10^8 changed docs —
-        # no coalesce(1) single-task funnel).
-        changed_keys = changes.select(DOC_KEY).distinct()
-        (
-            changed_keys.withColumn("epoch", F.lit(epoch).cast("int"))
-            .write.mode("append")
-            .partitionBy("epoch")
-            .parquet(self.tombstones_path)
+        self._write_tombstones(stage.select(DOC_KEY), epoch)
+        self._maintain()
+        feed = stage.select(
+            DOC_KEY,
+            F.coalesce(
+                F.filter("pairs", lambda p: p["index_key"].isNotNull()),
+                self._no_pairs,
+            ).alias("value"),
+            F.lit(False).alias("deleted"),
         )
-        self._tomb_bytes_cache = None
+        for down in self._downstreams:
+            down.update(feed, assume_unique=True)
+        return feed
 
-        # one post-write listing pair, shared by the due check and the
-        # fold policy (object-store LIST calls are the hot-path tax)
+    def _maintain(self) -> None:
+        """Post-write upkeep: one epoch listing pair, shared by the due
+        check and the fold policy (object-store LIST calls are the
+        hot-path tax), then the inline fold or a view refresh."""
         seg_eps = _list_epochs(self.spark, self.segments_path)
         tomb_eps = _list_epochs(self.spark, self.tombstones_path)
         self._set_compaction_due(seg_eps, tomb_eps)
@@ -1326,11 +1351,6 @@ class MapIndex:
             self._auto_fold(seg_eps, tomb_eps)  # refreshes views itself
         else:
             self._refresh_views()
-
-        feed = self.changes_feed(changed_keys)
-        for down in self._downstreams:
-            down.update(feed, assume_unique=True)
-        return feed
 
     def _set_compaction_due(
         self,
@@ -1505,100 +1525,32 @@ class MapIndex:
         surviving keys).
 
         Downstream chained indexes receive the standard empty-emit
-        change feed before this returns. The doomed key set is
-        materialized to a scratch parquet BEFORE the tombstones are
-        written — a lazy re-evaluation after the write would see its
-        own deletions and propagate an empty feed. A cache
-        (``persist()``) is NOT enough: the tombstone append fires
-        Spark's recacheByPath/refreshByPath for the written path, and
-        whenever prior tombstone epochs exist the doomed plan contains
-        a tombstone-path scan, so the cache is re-COMPUTED against the
-        refreshed listing — silently empty (caught by
-        tests/test_model.py's chained variant). A scratch file read is
-        immune: its plan references only the scratch path.
-
-        Scratch lives under ``<root>/_scratch/`` — a non-data sibling
-        of segments/tombstones (the ``_`` prefix is additionally
-        Hadoop-hidden, like ``_SUCCESS``), so a reader listing the
-        index root can never ingest it and Spark logs no ignored-path
-        WARN. Ordering matters: the downstream feed is propagated
-        BEFORE the auto-compact block. Post-tombstone the feed is
-        identical pre/post compact (the doomed docs have no live
-        emits either way), and the reentrant ``_auto_fold`` →
-        ``compact()`` would otherwise janitor-sweep the scratch while
-        the feed plan still references it (ADVICE r11 high; regression
-        tests/test_durability.py::
-        test_delete_range_survives_reentrant_auto_fold).
+        change feed ``(doc_key, [], false)`` before this returns: a
+        just-tombstoned doc has no live emits. The doomed key set is
+        evaluated once, into an eager ``localCheckpoint``, before the
+        tombstone write — a lazy re-evaluation afterwards would see
+        its own deletions.
         """
         self._recover_fold()
-        scratch = posixpath.join(self.root, _SCRATCH, "delrange_keys")
-        try:
-            (
-                self.scan(start=start, end=end, key=key)
-                .select(DOC_KEY)
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(scratch)
-            )
-            doomed = self.spark.read.parquet(scratch)
-            n = doomed.count()
-            if not n:
-                return 0
-            epoch = self._next_epoch()
-            (
-                doomed.withColumn("epoch", F.lit(epoch).cast("int"))
-                .write.mode("append")
-                .partitionBy("epoch")
-                .parquet(self.tombstones_path)
-            )
-            self._tomb_bytes_cache = None
-            # downstream propagation consumes the feed eagerly (their
-            # update() writes are actions) while ``doomed`` is pinned —
-            # and BEFORE any reentrant fold can sweep the scratch
-            feed = self.changes_feed(doomed)
-            for down in self._downstreams:
-                down.update(feed, assume_unique=True)
-            seg_eps = _list_epochs(self.spark, self.segments_path)
-            tomb_eps = _list_epochs(self.spark, self.tombstones_path)
-            self._set_compaction_due(seg_eps, tomb_eps)
-            if self.compaction_due and self.auto_compact:
-                self._auto_fold(seg_eps, tomb_eps)
-            else:
-                self._refresh_views()
-            return n
-        finally:
-            # sweep the whole staging dir, not just the child — an
-            # empty _scratch/ left behind is harmless (hidden) but
-            # pollutes listings; delete_range is the only writer here
-            # and writers are lease-serialized
-            _delete_path(self.spark, posixpath.join(self.root, _SCRATCH))
-
-    def changes_feed(
-        self, keys: DataFrame, broadcast_keys: bool | None = None
-    ) -> DataFrame:
-        """(doc_key, value, deleted) for the given doc keys, from the
-        stored index. Docs with no live emits surface as
-        ``value=[], deleted=false`` — the reference pushes
-        ``{key, value: []}`` downstream on tombstone/empty-emit
-        (index.js:190, 201, 223) and the *downstream map fn* runs on
-        the empty array and decides; it is not a tombstone for the
-        downstream index.
-
-        ``broadcast_keys``: ``None`` (default) lets AQE pick the join
-        strategy from the key set's RUNTIME size — small change
-        batches broadcast, a 10⁸-doc batch falls back to a shuffled
-        join instead of OOMing the driver (a forced hint has no such
-        guard). ``True`` forces the broadcast hint, ``False`` forbids
-        it (full-corpus feeds).
-        """
-        docs = self.as_documents(keys=keys, broadcast_keys=broadcast_keys)
-        return keys.join(docs, DOC_KEY, "left").select(
+        doomed = (
+            self.scan(start=start, end=end, key=key)
+            .select(DOC_KEY)
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        n = doomed.count()
+        if not n:
+            return 0
+        self._write_tombstones(doomed, self._next_epoch())
+        self._maintain()
+        feed = doomed.select(
             DOC_KEY,
-            F.coalesce(
-                F.col("value"), F.array().cast(pairs_type(self.mapper.value_type))
-            ).alias("value"),
+            self._no_pairs.alias("value"),
             F.lit(False).alias("deleted"),
         )
+        for down in self._downstreams:
+            down.update(feed, assume_unique=True)
+        return n
 
     # ---------------------------------------------------------------- read
 
@@ -2020,22 +1972,14 @@ class MapIndex:
         self._downstreams.append(downstream)
         return downstream
 
-    def as_documents(
-        self, keys: DataFrame | None = None, broadcast_keys: bool | None = None
-    ) -> DataFrame:
+    def as_documents(self) -> DataFrame:
         """This index's output as a documents table
         ``(doc_key, value: array<struct<index_key, value>>)`` — the
         shape piped downstream by the reference (index.js:244).
-
-        ``broadcast_keys`` as in :meth:`changes_feed` (None = AQE
-        decides from runtime size).
         """
-        idx = self.read()
-        if keys is not None:
-            k = F.broadcast(keys) if broadcast_keys else keys
-            idx = idx.join(k, DOC_KEY, "left_semi")
         return (
-            idx.groupBy(DOC_KEY)
+            self.read()
+            .groupBy(DOC_KEY)
             .agg(
                 # field comparator: sorting the struct directly fails
                 # analysis whenever value_type contains a MapType
@@ -2365,17 +2309,6 @@ class MapIndex:
         readers meanwhile serve the post-fold view and change nothing.
         """
         self._recover_fold()
-        # janitor duty: a delete_range that died mid-call leaves its
-        # _scratch staging behind (its finally never ran). The lease
-        # serializes writers ACROSS handles, but NOT this handle's own
-        # reentrant path — delete_range's _auto_fold calls compact()
-        # at depth 2 while its scratch may still be referenced — so
-        # only sweep when this compact() holds the OUTERMOST lease
-        # (ADVICE r11 high).
-        if self._lease_depth <= 1:
-            _delete_path(
-                self.spark, posixpath.join(self.root, _SCRATCH)
-            )
         epochs = _list_epochs(self.spark, self.segments_path)
         if max_epochs is not None and 0 < max_epochs < len(epochs):
             if tier not in ("oldest", "newest"):

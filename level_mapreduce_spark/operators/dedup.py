@@ -265,7 +265,7 @@ def jaccard_pairs_exact(
     n_part = docs.sparkSession.sparkContext.defaultParallelism
     # explode_outer + null filter: a plain explode gets an inferred
     # size()>0 filter whose pushdown clones the shingle chain below
-    # the repartition (see MapIndex._emits for the full story)
+    # the repartition (see MapIndex._explode for the full story)
     # pinned: sizes and BOTH self-join sides derive from sh — unpinned,
     # the tokenize+shingle explode ran once per consumer (three full
     # corpus re-derivations; r16, the fuzzy_pairs repeated-subtree fix).

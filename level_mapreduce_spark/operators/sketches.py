@@ -223,30 +223,33 @@ def update_sketch_index(
     idx.sketch_kind = kind
     base, merge = _SKETCH_KINDS[kind]
     part = _bucket_docs(base(new_events, bucket)).persist()
-    # read back ONLY the touched key range (a batch covers a narrow,
-    # recent time window; bucket keys are chronological) — a pruned
-    # index scan, not a full read. Two driver-side scalars, bounded.
-    bounds = part.agg(
-        F.min("bucket_key").alias("lo"), F.max("bucket_key").alias("hi")
-    ).first()
-    if bounds["lo"] is None:
-        part.unpersist()
-        return
-    existing = idx.scan(start=bounds["lo"], end=bounds["hi"] + "\x7f").select(
-        F.col("index_key").alias("bucket_key"),
-        F.col("value").alias("_old"),
-    )
-    merged = part.join(existing, "bucket_key", "left").select(
-        "bucket_key",
-        F.when(
-            F.col("_old").isNotNull(),
-            merge(F.col("sketch"), F.col("_old")),
+    try:
+        # read back ONLY the touched key range (a batch covers a narrow,
+        # recent time window; bucket keys are chronological) — a pruned
+        # index scan, not a full read. Two driver-side scalars, bounded.
+        bounds = part.agg(
+            F.min("bucket_key").alias("lo"), F.max("bucket_key").alias("hi")
+        ).first()
+        if bounds["lo"] is None:
+            return
+        existing = idx.scan(
+            start=bounds["lo"], end=bounds["hi"] + "\x7f"
+        ).select(
+            F.col("index_key").alias("bucket_key"),
+            F.col("value").alias("_old"),
         )
-        .otherwise(F.col("sketch"))
-        .alias("sketch"),
-    )
-    idx.update(merged, assume_unique=True)
-    part.unpersist()
+        merged = part.join(existing, "bucket_key", "left").select(
+            "bucket_key",
+            F.when(
+                F.col("_old").isNotNull(),
+                merge(F.col("sketch"), F.col("_old")),
+            )
+            .otherwise(F.col("sketch"))
+            .alias("sketch"),
+        )
+        idx.update(merged, assume_unique=True)
+    finally:
+        part.unpersist()
 
 
 def _bucket_docs(sketches: DataFrame) -> DataFrame:

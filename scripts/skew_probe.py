@@ -137,9 +137,11 @@ def run_scenario(spark, docs, store, name, skewed: bool) -> dict:
     build_s = time.time() - t0
 
     # the write path's exact partitioning
-    emits = idx._emits(
-        idx._normalize_changes(docs, assume_unique=True).where(
-            ~F.col("deleted")
+    emits = idx._explode(
+        idx.mapper.pairs(
+            idx._normalize_changes(docs, assume_unique=True).where(
+                ~F.col("deleted")
+            )
         )
     )
     write_bal = balance(

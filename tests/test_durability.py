@@ -1918,14 +1918,11 @@ def _rekey_downstream(spark, store, name):
 def test_delete_range_survives_reentrant_auto_fold(spark, store, monkeypatch):
     """ADVICE r11 (high): delete_range with auto_compact=True (the
     default) can trip _set_compaction_due and reentrantly run
-    compact() via _auto_fold — whose janitor used to sweep the
-    .delrange_keys scratch WHILE the downstream feed still referenced
-    it. Evaluation in down.update() then read a deleted path after the
-    tombstones were already committed, so chained downstreams
-    permanently missed the deletions. The fix propagates the feed
-    BEFORE the maintenance block (post-tombstone, the feed is
-    identical pre/post compact) and makes the janitor skip the sweep
-    under a reentrant lease."""
+    compact() via _auto_fold. The downstream must still receive the
+    deletion feed afterwards: once tombstoned, a doomed doc has no
+    live emits, so the feed is the same before and after the fold
+    (it once read a scratch file the reentrant fold had swept, and
+    chained downstreams permanently missed the deletions)."""
     from level_mapreduce_spark.engine import index as index_mod
 
     idx = kv_index(spark, store, "drf_up")  # auto_compact defaults True
@@ -1955,8 +1952,7 @@ def test_delete_range_survives_reentrant_auto_fold(spark, store, monkeypatch):
     assert live_rows(down) == sorted(
         (f"d{i}", f"by_k{i}", float(i)) for i in range(3, 6)
     )
-    # scratch staging is gone (finally swept it), nothing under root
-    # that a reader listing the index could ingest
+    # nothing under root that a reader listing the index could ingest
     import os
 
     leftovers = [

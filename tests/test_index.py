@@ -634,3 +634,84 @@ def test_get_probe_empty_index(spark, store):
     idx = make_index(spark, store, name="never_built")
     assert idx.get("test") == [] and idx.count("test") == 0
     assert idx.get_df("test").count() == 0
+
+
+def test_update_feed_equals_stored_read_back(spark, store):
+    """update() returns the downstream feed from the batch's own stage;
+    it must equal a read-back of the stored index over the changed
+    keys (as_documents, with [] for docs that have no live emits) —
+    across overwrite, delete, re-insert of a deleted doc, empty emit,
+    a null-key pair, 3+ emits per doc and a MapType value."""
+    value_type = T.MapType(T.StringType(), T.LongType())
+    kv = T.ArrayType(
+        T.StructType(
+            [T.StructField("k", T.StringType()), T.StructField("v", T.LongType())]
+        )
+    )
+    schema = T.StructType(
+        [
+            T.StructField("doc_key", T.StringType()),
+            T.StructField("kv", kv),
+            T.StructField("deleted", T.BooleanType()),
+        ]
+    )
+    mapper = ExprMapper(
+        F.transform(
+            "kv",
+            lambda p: F.struct(
+                p["k"].alias("index_key"),
+                F.create_map(F.lit("v"), p["v"]).alias("value"),
+            ),
+        ),
+        value_type=value_type,
+    )
+    idx = MapIndex(spark, "feed", mapper, store, auto_compact=False)
+
+    def batch(rows):
+        return spark.createDataFrame(
+            [(d, kv or [], kv is None) for d, kv in rows], schema
+        )
+
+    def as_dict(df):
+        return {
+            r["doc_key"]: [
+                (p["index_key"], dict(p["value"])) for p in r["value"]
+            ]
+            for r in df.collect()
+        }
+
+    def read_back(keys):
+        stored = as_dict(idx.as_documents())
+        return {k: stored.get(k, []) for k in keys}
+
+    idx.build(
+        batch(
+            [
+                ("d1", [("a", 1)]),
+                ("d2", [("b", 2), ("c", 3)]),
+                ("d3", [("c", 4)]),
+                ("d4", [("d", 5)]),
+            ]
+        ),
+        assume_unique=True,
+    )
+    batches = [
+        [
+            ("d1", [("e", 1), ("a", 2), ("e", 3), ("b", 4)]),  # overwrite, 4 emits
+            ("d2", None),  # delete
+            ("d3", []),  # empty emit
+            ("d4", [("d", 6), (None, 7), ("a", 8)]),  # null-key pair
+            ("d5", [("z", 9)]),  # new doc
+        ],
+        [
+            ("d2", [("b", 10), ("b", 11), ("a", 12)]),  # re-insert of a deleted doc
+            ("d5", None),
+            ("d6", None),  # delete of a doc never stored
+        ],
+    ]
+    for rows in batches:
+        feed = idx.update(batch(rows))
+        assert {r["deleted"] for r in feed.collect()} == {False}
+        got = as_dict(feed)
+        assert got == read_back([d for d, _ in rows])
+    assert got["d2"] == [("b", {"v": 10}), ("b", {"v": 11}), ("a", {"v": 12})]

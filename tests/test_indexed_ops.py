@@ -162,6 +162,32 @@ def test_sketch_index_incremental_equals_full(spark, sf_dir, tmp_path):
     assert "PushedFilters" in plan and "index_key" in plan
 
 
+def test_sketch_update_failure_releases_cache(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """update_sketch_index caches the batch's bucket sketches for the
+    bounds scalar and the merge; an idx.update() that raises must
+    still release them — no CacheManager entry outlives the call."""
+    from level_mapreduce_spark.operators.sketches import (
+        build_sketch_index,
+        update_sketch_index,
+    )
+
+    events = load_table(spark, sf_dir, "events")
+    idx = build_sketch_index(
+        spark, events.limit(200), str(tmp_path / "sk"), name="sk_leak"
+    )
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("update failed")
+
+    monkeypatch.setattr(idx, "update", boom)
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="update failed"):
+        update_sketch_index(idx, events)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_sketch_index_kll_and_theta_kinds(spark, sf_dir, tmp_path):
     """The kll and theta kinds of the stored continuous aggregate:
     incremental fold equals from-scratch build (merge associativity

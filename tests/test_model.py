@@ -187,8 +187,7 @@ def _down_flatten(model):
 # variant monkeypatches the fold thresholds to 1-byte tombstone
 # pressure, so EVERY mutation runs the reentrant _auto_fold →
 # compact() path inside update()/delete_range() — the interleaving
-# ADVICE r11 (high) flagged as uncovered (the janitor sweeping
-# delete_range's live scratch).
+# ADVICE r11 (high) flagged as uncovered.
 _CASES = [(7, False, False), (23, True, False), (41, True, True)] + [
     (int(s), True, True)
     for s in os.environ.get("LMR_MODEL_SEEDS", "").split(",")
@@ -196,48 +195,45 @@ _CASES = [(7, False, False), (23, True, False), (41, True, True)] + [
 ]
 
 
-def test_compact_sweeps_crash_orphaned_delete_range_scratch(spark, store):
-    """A delete_range that dies mid-call leaves _scratch/delrange_keys
-    under the index root (its finally never ran); an OUTERMOST
-    compact() — lease-held, so no other handle's delete_range can be
-    live — sweeps the orphan. A REENTRANT compact (lease depth > 1,
-    i.e. called from inside delete_range's own _auto_fold) must NOT
-    sweep: the outer call may still hold a reader on the scratch
-    (ADVICE r11 high)."""
-    import os
+def test_chained_delete_range_creates_no_scratch(spark, store, monkeypatch):
+    """delete_range pins its doomed key set in memory (an eager
+    localCheckpoint) and feeds the downstream ``(doc_key, [], false)``
+    directly: a chained call — plain, and with 1-byte tombstone
+    pressure so the reentrant _auto_fold -> compact() runs inside it —
+    writes nothing under either index root but segments/, tombstones/
+    and sidecars, and the replica drops exactly the doomed docs."""
+    from level_mapreduce_spark.engine import index as index_mod
 
-    idx = MapIndex(
-        spark, "janitor", _mapper(), store,
-        doc_key="doc_id", auto_compact=False,
-    )
-    idx.build(
-        _docs_df(spark, [("d1", [("a", 1)])]), assume_unique=True
-    )
-    scratch = os.path.join(idx.root, "_scratch", "delrange_keys")
-    os.makedirs(scratch)
-    with open(os.path.join(scratch, "orphan.parquet"), "w") as f:
-        f.write("crash residue")
+    idx = MapIndex(spark, "noscratch", _mapper(), store, doc_key="doc_id")
+    down = MapIndex(spark, "noscratch_down", _down_mapper(), store)
+    idx.pipe(down)
+    model = {
+        "d1": [("a", 1), ("c", 3)],
+        "d2": [("b", 2)],
+        "d3": [("c", 4)],
+        "d4": [("d", 5)],
+    }
+    idx.build(_docs_df(spark, list(model.items())), assume_unique=True)
 
-    # scratch is invisible to a reader listing the index root: both
-    # path components are "_"/"." prefixed (Hadoop-hidden), so only
-    # the real data dirs are exposed
-    visible = [
-        p for p in os.listdir(idx.root) if not p.startswith(("_", "."))
-    ]
-    assert set(visible) <= {"segments", "tombstones"}, visible
+    def check():
+        assert _collect_rows(idx.scan()) == _flatten(model)
+        assert _collect_rows(down.scan()) == _down_flatten(model)
+        for root in (idx.root, down.root):
+            assert not os.path.exists(os.path.join(root, "_scratch"))
+            dirs = {
+                p for p in os.listdir(root)
+                if os.path.isdir(os.path.join(root, p))
+            }
+            assert dirs <= {"segments", "tombstones"}, dirs
 
-    # reentrant compact (depth 2) leaves the scratch alone
-    idx._acquire_lease()
-    try:
-        idx.compact()
-        assert os.path.exists(scratch)
-    finally:
-        idx._release_lease()
-
-    # outermost compact sweeps it
-    idx.compact()
-    assert not os.path.exists(os.path.join(idx.root, "_scratch"))
-    assert _collect_rows(idx.scan()) == {("a", "d1", 0, 1)}
+    assert idx.delete_range(start="a", end="b") == 1
+    del model["d1"]
+    check()
+    monkeypatch.setattr(index_mod, "TOMBSTONE_BROADCAST_BYTES", 1)
+    assert idx.delete_range(key="b") == 1
+    del model["d2"]
+    assert not idx.stats()["tombstone_epochs"]  # the reentrant fold ran
+    check()
 
 
 def test_full_compact_of_fully_deleted_index_keeps_epoch_numbering(

@@ -201,3 +201,93 @@ def test_bm25_served_pushes_query_term_keys(spark):
     assert "StringStartsWith(index_key,DF#)" in tplan
     assert not re.search(r"[\[,(]L#", tplan), "tfidf serve reads L# slice"
     assert "partial_count" not in tplan
+
+
+def _jobs_during(spark, fn):
+    """(result, Spark jobs started while ``fn`` ran) — a numTotalJobs
+    window, which also sees jobs submitted from helper threads."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    out = fn()
+    return out, dag.numTotalJobs() - before
+
+
+def _piped_pair(spark, store):
+    """An expression-mapped index piped into a Python-mapped one (the
+    kv_mixed shape), built over 1000 docs."""
+    from pyspark.sql import types as T
+
+    from level_mapreduce_spark import ExprMapper, MapIndex, PythonMapper, emit
+
+    up = MapIndex(
+        spark, "up",
+        ExprMapper(
+            F.array(
+                emit(F.col("k"), F.col("v")),
+                emit(F.concat(F.lit("x"), F.col("k")), F.col("v")),
+            ),
+            value_type=T.DoubleType(),
+        ),
+        store, doc_key="doc_key", auto_compact=False,
+    )
+    down = MapIndex(
+        spark, "down",
+        PythonMapper(lambda d: [(p["index_key"], 1) for p in d["value"]]),
+        store, auto_compact=False,
+    )
+    up.pipe(down)
+    up.build(
+        spark.createDataFrame(
+            [(f"d{i}", f"k{i % 50}", float(i)) for i in range(1000)],
+            "doc_key string, k string, v double",
+        ),
+        assume_unique=True,
+    )
+    return up, down
+
+
+def test_piped_write_job_budget(spark, store):
+    """A piped update stages its batch once — segment, tombstones and
+    the downstream feed come from one pinned (doc_key, pairs) frame,
+    with no read-back of the index — and a chained delete_range feeds
+    the downstream from its pinned key set: a 200-doc piped update
+    runs at most 14 Spark jobs (19 with the read-back feed) and a
+    chained delete_range at most 12 (16 with scratch staging)."""
+    up, down = _piped_pair(spark, store)
+    changes = spark.createDataFrame(
+        [(f"d{i}", f"k{i % 7}", -float(i), i % 5 == 0) for i in range(0, 400, 2)],
+        "doc_key string, k string, v double, deleted boolean",
+    )
+    up.update(changes)  # first call pays one-time class loading
+    _, n_update = _jobs_during(spark, lambda: up.update(changes))
+    n_doomed, n_delete = _jobs_during(
+        spark, lambda: up.delete_range(start="k1", end="k2")
+    )
+    assert n_doomed > 0 and down.count() == up.count()
+    assert n_update <= 14, n_update
+    assert n_delete <= 12, n_delete
+
+
+def test_update_evaluates_changes_once(spark, store):
+    """``changes`` is evaluated once per update, chained included: a
+    Python UDF in the caller's plan counts its row evaluations (the
+    read-back design evaluated it for the segment, the tombstones and
+    the feed)."""
+    up, down = _piped_pair(spark, store)
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(k):
+        calls.add(1)
+        return k
+
+    counted_udf = F.udf(counted, "string")
+    base = spark.createDataFrame(
+        [(f"d{i}", f"k{i % 7}", float(i), i % 4 == 0) for i in range(0, 60, 3)],
+        "doc_key string, k string, v double, deleted boolean",
+    )
+    changes = base.withColumn("doc_key", counted_udf("doc_key"))
+    for assume_unique in (False, True):
+        calls.value = 0
+        up.update(changes, assume_unique=assume_unique)
+        assert calls.value == base.count(), (assume_unique, calls.value)
+    assert down.count() == up.count()
