@@ -41,6 +41,7 @@ from __future__ import annotations
 import functools
 import glob
 import json
+import operator
 import os
 import posixpath
 import threading
@@ -57,13 +58,23 @@ from level_mapreduce_spark.engine.mapper import (
     pairs_type,
     struct_order_cmp,
 )
-from level_mapreduce_spark.engine.query import Query, _contains_map
+from level_mapreduce_spark.engine.query import (
+    Query,
+    _contains_map,
+    _contains_type,
+)
 
 _SEGMENTS = "segments"
 _TOMBSTONES = "tombstones"
 # compact()'s commit journal, a sidecar beside segments/ (see
 # MapIndex._recover_fold)
 _FOLD_INTENT = "fold.json"
+# row order of a driver-side key lookup (MapIndex._probe / _lookup)
+_PROBE_ORDER = [
+    ("index_key", "ascending"),
+    (DOC_KEY, "ascending"),
+    ("emit_pos", "ascending"),
+]
 
 # LSM maintenance thresholds (100 TB guard rails): past either, update()
 # folds epochs back to one — unbounded epoch/tombstone growth is the
@@ -198,6 +209,18 @@ def _path_bytes(spark: SparkSession, path: str) -> int:
     return fs.getContentSummary(hpath).getLength()
 
 
+def _key_filter(keys: list[str]):
+    """pyarrow filter for the rows under the literal ``keys``: an OR
+    of equalities, not ``isin`` — pyarrow prunes Parquet row groups by
+    their min/max statistics for each equality, but keeps every row
+    group for an ``isin``."""
+    import pyarrow.dataset as ds
+
+    return functools.reduce(
+        operator.or_, [ds.field("index_key") == k for k in keys]
+    )
+
+
 def _hashable(col: str, dt: T.DataType):
     """xxhash64-safe view of a column: hashing a MapType (at any
     nesting depth) raises DATATYPE_MISMATCH.HASH_MAP_TYPE, so
@@ -263,6 +286,18 @@ class MapIndex:
         auto_compact: bool = True,
         compact_epochs: int | None = None,
     ):
+        if mapper is not None and _contains_type(
+            mapper.value_type, T.YearMonthIntervalType
+        ):
+            # such an index builds, but neither collect() nor the key
+            # probe can decode its values back into Python
+            raise ValueError(
+                f"MapIndex {name!r}: value type "
+                f"{mapper.value_type.simpleString()} contains "
+                "YearMonthIntervalType, which cannot be read back into "
+                "Python (YearMonthIntervalType.fromInternal is not "
+                "implemented); store the interval as an int month count"
+            )
         self.spark = spark
         self.name = name
         self.mapper = mapper
@@ -1693,20 +1728,22 @@ class MapIndex:
             return None
         return fs.makeQualified(hpath).toUri().getPath()
 
-    def _probe(self, key: str):
-        """Driver-side key probe: the live rows under exactly ``key``
-        as an Arrow table ``(index_key, emit_pos, value, doc_key)``
-        sorted by ``(doc_key, emit_pos)``, read with pyarrow from the
-        Parquet files of the committed view — no Spark job. Row-group
-        min/max statistics of the range-partitioned layout prune the
-        read to the key's row groups, and tombstones are read only
-        for the matched docs. Applies :meth:`_live`'s rule: a row
-        dies iff some marker of its doc is newer than its epoch.
+    def _probe(self, keys: list[str], hi: int | None = None):
+        """Driver-side key probe: the live rows under the literal
+        ``keys`` as an Arrow table ``(index_key, emit_pos, value,
+        doc_key)`` sorted by ``(index_key, doc_key, emit_pos)``, read
+        with pyarrow from the Parquet files of the committed view — no
+        Spark job. Row-group min/max statistics of the
+        range-partitioned layout prune the read to the keys' row
+        groups, and tombstones are read only for the matched docs.
+        Applies :meth:`_live`'s rule with its ``hi`` bound (segments
+        and markers of epochs ``<= hi``): a row dies iff some marker
+        of its doc is newer than its epoch.
 
         Returns None when the store is not local, or when a file
         vanished mid-probe (another process's fold commit); the
         caller then answers from the Spark path. Memory is the answer
-        plus the pruned row groups — :meth:`get` materializes the
+        plus the pruned row groups — the callers materialize the
         whole answer on the driver anyway."""
         root = self._local_root()
         if root is None:
@@ -1721,6 +1758,8 @@ class MapIndex:
         dirs = [(posixpath.join(seg_root, f"epoch={e}"), e) for e in epochs]
         if fold_max is not None:
             dirs.append((posixpath.join(seg_root, ".fold_tmp"), fold_max))
+        if hi is not None:
+            dirs = [(d, e) for d, e in dirs if e <= hi]
         schema = to_arrow_schema(
             T.StructType([f for f in self._storage_schema if f.name != "epoch"])
         )
@@ -1731,7 +1770,7 @@ class MapIndex:
         fmt = ds.ParquetFileFormat(
             read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
         )
-        hit = ds.field("index_key") == key
+        hit = _key_filter(keys)
         tomb_root = posixpath.join(root, _TOMBSTONES)
         try:
             # list every segment AND tombstone file before reading any:
@@ -1759,8 +1798,11 @@ class MapIndex:
             docs = {d for t, _ in parts for d in t[DOC_KEY].to_pylist()}
             newest = {}
             if docs and tombs is not None:
+                marks = ds.field(DOC_KEY).isin(sorted(docs))
+                if hi is not None:
+                    marks = marks & (ds.field("epoch") <= hi)
                 by_doc = (
-                    tombs.to_table(filter=ds.field(DOC_KEY).isin(sorted(docs)))
+                    tombs.to_table(filter=marks)
                     .group_by(DOC_KEY)
                     .aggregate([("epoch", "max")])
                 )
@@ -1773,9 +1815,25 @@ class MapIndex:
         for t, e in parts:
             dead = pa.array([d for d, m in newest.items() if m > e], pa.string())
             live.append(t.filter(pc.invert(pc.is_in(t[DOC_KEY], value_set=dead))))
-        return pa.concat_tables(live).sort_by(
-            [(DOC_KEY, "ascending"), ("emit_pos", "ascending")]
-        )
+        return pa.concat_tables(live).sort_by(_PROBE_ORDER)
+
+    def _lookup(self, keys: list[str], hi: int | None = None):
+        """The live rows under the literal ``keys`` as of epoch ``hi``
+        (``_live(hi=)``'s rule) as an Arrow table ``(index_key,
+        emit_pos, value, doc_key)`` sorted by ``(index_key, doc_key,
+        emit_pos)``: the driver-side key probe on a local store (no
+        Spark job), else one Spark collect of
+        :meth:`_lookup_df`. For bounded key lists — the stored
+        families' point lookups."""
+        rows = self._probe(keys, hi)
+        if rows is None:
+            rows = self._lookup_df(keys, hi).toArrow().sort_by(_PROBE_ORDER)
+        return rows
+
+    def _lookup_df(self, keys: list[str], hi: int | None = None) -> DataFrame:
+        """Spark form of :meth:`_lookup`: a literal In over ``keys``,
+        pushed to the Parquet scans."""
+        return self._live(hi=hi).where(F.col("index_key").isin(keys))
 
     def scan(
         self,
@@ -1875,7 +1933,7 @@ class MapIndex:
         stores, or a probe that lost a race with a fold commit,
         collect :meth:`get_df`.
         """
-        rows = self._probe(key)
+        rows = self._probe([key])
         if rows is None:
             return [r["value"] for r in self.get_df(key).collect()]
         from pyspark.sql.conversion import ArrowTableToRowsConversion
@@ -1894,7 +1952,7 @@ class MapIndex:
         (index.js:148-150), implemented. ``count(key)`` on a local
         store is the driver-side key probe's row count (no Spark
         job), as in :meth:`get`."""
-        rows = None if key is None else self._probe(key)
+        rows = None if key is None else self._probe([key])
         if rows is None:
             return self.scan(key=key).count()
         return rows.num_rows

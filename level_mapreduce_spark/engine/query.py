@@ -35,17 +35,27 @@ from pyspark.sql import types as T
 from level_mapreduce_spark.engine.mapper import struct_order_cmp
 
 
+def _contains_type(dt: T.DataType, cls: type) -> bool:
+    """True when ``dt`` is or contains a ``cls`` type at any nesting
+    depth (array elements, map keys and values, struct fields)."""
+    if isinstance(dt, cls):
+        return True
+    if isinstance(dt, T.ArrayType):
+        return _contains_type(dt.elementType, cls)
+    if isinstance(dt, T.MapType):
+        return _contains_type(dt.keyType, cls) or _contains_type(
+            dt.valueType, cls
+        )
+    if isinstance(dt, T.StructType):
+        return any(_contains_type(f.dataType, cls) for f in dt.fields)
+    return False
+
+
 def _contains_map(dt: T.DataType) -> bool:
     """True when ``dt`` contains a MapType at any nesting depth (maps
     are unorderable: default-comparator array_sort / xxhash64 over
     them fail analysis)."""
-    if isinstance(dt, T.MapType):
-        return True
-    if isinstance(dt, T.ArrayType):
-        return _contains_map(dt.elementType)
-    if isinstance(dt, T.StructType):
-        return any(_contains_map(f.dataType) for f in dt.fields)
-    return False
+    return _contains_type(dt, T.MapType)
 
 
 class Query:

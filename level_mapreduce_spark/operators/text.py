@@ -15,6 +15,9 @@ regex and RE2.
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -427,26 +430,12 @@ def bm25_topk(
     ).where(F.col("term").isin(q_terms))
     tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    return _bm25_score(tf.join(dl, "doc_id"), dfreq, stats, k, k1, b)
-
-
-def _bm25_score(
-    tfdl: DataFrame,
-    dfreq: DataFrame,
-    stats: DataFrame,
-    k: int,
-    k1: float,
-    b: float,
-) -> DataFrame:
-    """Shared BM25 scoring tail over (doc_id, term, tf, dl) /
-    (term, df) / 1-row (n_docs, avgdl) frames — one expression for
-    both the corpus-rescan path (:func:`bm25_topk`, which joins its
-    dl branch in) and the stored-postings path
-    (:func:`bm25_topk_from_index`, where dl rides each posting), so
-    the two are value-identical by construction, not by parallel
-    maintenance."""
+    # the served single query (_bm25_topk_rows) and the batch serve
+    # evaluate this same expression; their identity with it is tested
+    # tuple for tuple, not shared code
     return (
-        tfdl.join(F.broadcast(dfreq), "term")
+        tf.join(dl, "doc_id")
+        .join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "_idf",
@@ -1242,9 +1231,10 @@ def tfidf_from_index(idx, as_of_seq: int | None = None) -> DataFrame:
     re-tokenize AND no per-serve corpus aggregate (v2): tf rides the
     stored ``T#`` rows, df joins the maintained ``DF#`` stats rows
     (no groupBy over the postings), N is one stored-row point lookup
-    (driver-side scalar, same contract as ``tfidf``'s
-    ``docs.count()``). Value-identical to the batch operator (same
-    formula, integer inputs).
+    (:func:`_stats_lookup`: a driver-side scalar with no Spark job on
+    a local store, same contract as ``tfidf``'s ``docs.count()``).
+    Value-identical to the batch operator (same formula, integer
+    inputs).
 
     ``as_of_seq`` serves a recorded historical snapshot — postings
     AND stats epoch-filtered to the consistent pair stamped at that
@@ -1270,27 +1260,81 @@ def tfidf_from_index(idx, as_of_seq: int | None = None) -> DataFrame:
 def _stats_lookup(
     idx, terms: list[str], as_of_epoch: int | None = None
 ) -> tuple[int, int, dict[str, int]]:
-    """One bounded driver collect of the stats rows a single-query
-    serve needs: (n_docs, sum_dl, {term: df}) via a literal In over
-    2 + len(terms) keys (point lookups on the stats index). Driver-
-    side BY DESIGN — the slice is O(query terms) at any corpus size,
-    and folding it to literals keeps the serve plan to ONE scan
-    subtree (the r15 profile: every extra ``read()`` subtree costs a
-    fixed tombstone-broadcast + listing overhead that dwarfed the
-    data at bench scale)."""
+    """The stats rows a single-query serve needs, as driver-side
+    scalars: (n_docs, sum_dl, {term: df}) from the 2 + len(terms)
+    literal keys ``N#``, ``DL#``, ``DF#<term>`` of the stats index —
+    one :meth:`MapIndex._lookup` (the driver-side key probe on a
+    local store, no Spark job; else one bounded Spark collect). The
+    slice is O(query terms) at any corpus size."""
     keys = [_SK_NDOCS, _SK_SUMDL] + [f"{_SK_DF}{t}" for t in terms]
-    rows = (
-        idx.stats.read(as_of_epoch=as_of_epoch)
-        .where(F.col("index_key").isin(keys))
-        .collect()
+    rows = idx.stats._lookup(keys, as_of_epoch)
+    vals = dict(
+        zip(rows["index_key"].to_pylist(), rows["value"].to_pylist())
     )
-    vals = {r["index_key"]: int(r["value"]) for r in rows}
     df = {
         t: vals[f"{_SK_DF}{t}"]
         for t in terms
         if f"{_SK_DF}{t}" in vals
     }
     return vals.get(_SK_NDOCS, 0), vals.get(_SK_SUMDL, 0), df
+
+
+def _round6(x: float) -> float:
+    """Spark's ``round(x, 6)`` on a double: HALF_UP on the decimal
+    form of ``x``. Spark takes that form from Java's
+    ``Double.toString``, which equals ``repr`` except for its rare
+    non-shortest outputs before JDK 19."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _bm25_topk_rows(
+    post,
+    n_docs: int,
+    sum_dl: int,
+    dfs: dict[str, int],
+    k: int,
+    k1: float,
+    b: float,
+) -> list[tuple[int, float]]:
+    """Top-``k`` ``(doc_id, score)`` of one query, scored on the
+    driver from its ``T#<term>`` posting rows (an Arrow table sorted
+    by ``(index_key, doc_key)``, :meth:`MapIndex._lookup`) and the
+    stats scalars — :func:`bm25_topk`'s expression, evaluated in
+    the same operation order: idf once per term, each doc's terms
+    summed in ascending term order, 6dp HALF_UP rounding, then
+    ``(score DESC, doc_id)``. A term with no ``DF#`` row scores
+    nothing (the Spark form's inner join)."""
+    idf = {
+        t: math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+        for t, df in dfs.items()
+    }
+    if not idf or not post.num_rows:
+        return []
+    avgdl = float(sum_dl) / n_docs
+    value = post["value"].combine_chunks()
+    score: dict[int, float] = {}
+    rows = zip(
+        post["index_key"].to_pylist(),
+        post[DOC_KEY].to_pylist(),
+        value.field("tf").to_pylist(),
+        value.field("dl").to_pylist(),
+    )
+    for key, doc, tf, dl in rows:
+        term_idf = idf.get(key[2:])
+        if term_idf is None:
+            continue
+        w = (
+            term_idf
+            * (tf * (k1 + 1.0))
+            / (tf + k1 * (1.0 - b + b * dl / avgdl))
+        )
+        doc = int(doc)
+        score[doc] = score.get(doc, 0.0) + w
+    ranked = sorted(
+        ((d, _round6(s)) for d, s in score.items()),
+        key=lambda r: (-r[1], r[0]),
+    )
+    return ranked[:k]
 
 
 def bm25_topk_from_index(
@@ -1302,32 +1346,44 @@ def bm25_topk_from_index(
     as_of_seq: int | None = None,
 ) -> DataFrame:
     """Serve :func:`bm25_topk` from a stored postings index,
-    O(query-terms' postings) END TO END (v2): the query's ``T#`` and
-    ``DF#`` keys are literal Ins over the range-partitioned layouts
-    (pushed to the scans), per-doc dl rides each posting, and
-    N/avgdl are two stored stats rows — NO L#-slice scan, NO corpus
-    aggregate anywhere in the plan (plan-asserted,
-    tests/test_plans.py). Scoring is the SHARED :func:`_bm25_score`
-    tail, so batch and served results are identical by construction.
+    O(query-terms' postings) END TO END (v2): the query is
+    2 + 2·|terms| exact-key lookups — its ``T#<term>`` postings (dl
+    rides each posting) and the ``N#``/``DL#``/``DF#<term>`` stats
+    rows — NO L#-slice scan and NO corpus aggregate. Both lookups go
+    through :meth:`MapIndex._lookup`: on a local store the
+    driver-side key probe, so a served query starts no Spark job;
+    elsewhere (or when a probe loses a race with a fold commit) one
+    bounded Spark collect each. The rows are scored on the driver
+    (:func:`_bm25_topk_rows`) and returned as a local frame
+    ``(doc_id long, score double)``; equality with the rescan
+    operator and the batch serve is tested, tuple for tuple.
 
     ``as_of_seq`` serves a recorded historical snapshot (postings +
-    stats epoch-filtered to the consistent pair stamped at that seq,
+    stats epoch-bounded to the consistent pair stamped at that seq,
     :meth:`PostingsIndex.snapshots`) — historical BM25 equals the
     batch operator over the historical corpus."""
+    import pyarrow as pa
+
     q_terms = sorted({t for t in query.lower().split() if t})
     if not q_terms:
         raise ValueError("bm25_topk_from_index: query has no tokens")
     p_e = s_e = None
     if as_of_seq is not None:
         p_e, s_e = _resolve_seq(idx, as_of_seq)
-    # all three reads ride ONE job as parallel pruned subtrees — the
-    # r15 A/B measured this 1.4x faster than folding the stats slice
-    # to literals first (a bounded collect is a SEQUENTIAL extra job;
-    # the subtree scans are point lookups either way)
-    tfdl = _postings_frame(idx, terms=q_terms, as_of_epoch=p_e)
-    dfreq = _df_frame(idx, terms=q_terms, as_of_epoch=s_e)
-    stats = _stats_frame(idx, as_of_epoch=s_e)
-    return _bm25_score(tfdl, dfreq, stats, k, k1, b)
+    post = idx._lookup([f"T#{t}" for t in q_terms], p_e)
+    n_docs, sum_dl, dfs = _stats_lookup(idx, q_terms, as_of_epoch=s_e)
+    top = _bm25_topk_rows(post, n_docs, sum_dl, dfs, k, k1, b)
+    # an Arrow table becomes a local relation (its collect() starts no
+    # job) even when empty; an empty pandas frame would be parallelized
+    return idx.spark.createDataFrame(
+        pa.table(
+            {
+                "doc_id": pa.array([d for d, _ in top], pa.int64()),
+                "score": pa.array([s for _, s in top], pa.float64()),
+            }
+        ),
+        "doc_id long, score double",
+    )
 
 
 # The batch serve's regime threshold is the MEASURED crossover, not

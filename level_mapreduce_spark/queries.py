@@ -1187,10 +1187,10 @@ def q_bm25_topk(spark, sf_dir):
 
     Two variants in one tagged union (r14: `served` joined): `batch`
     rescans the corpus; `served` answers from the STORED postings
-    index — the query's T# keys as a pushed literal In (reads
-    O(query-terms' postings), never the corpus) + the narrow L#
-    doc-length slice, through the SAME _bm25_score tail. The oracle
-    computes the ranking once and emits it under both labels."""
+    index — key lookups of the query's T# postings and its
+    N#/DL#/DF# stats rows (O(query-terms' postings), never the
+    corpus), scored on the driver. The oracle computes the ranking
+    once and emits it under both labels."""
     docs = _docs(spark, sf_dir)
     batch = tx.bm25_topk(docs, _BM25_QUERY, k=10).select(
         F.lit("batch").alias("variant"), "*"

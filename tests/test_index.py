@@ -597,7 +597,7 @@ def test_get_probe_equals_spark(spark, store, kind):
     idx = _probe_index(spark, store, kind)
     want = _spark_answers(idx)
     assert want["k"][1] == 3 and want["gone"] == ([], 0)
-    assert all(idx._probe(key) is not None for key in _PROBE_KEYS)
+    assert all(idx._probe([key]) is not None for key in _PROBE_KEYS)
     assert {key: (idx.get(key), idx.count(key)) for key in _PROBE_KEYS} == want
 
 
@@ -634,6 +634,71 @@ def test_get_probe_empty_index(spark, store):
     idx = make_index(spark, store, name="never_built")
     assert idx.get("test") == [] and idx.count("test") == 0
     assert idx.get_df("test").count() == 0
+
+
+def test_key_list_probe_prunes_row_groups(spark, store):
+    """A 2-key probe over an index written in many small row groups
+    keeps only the row groups whose min/max statistics can hold one of
+    the keys, and answers the same rows as the Spark lookup."""
+    import glob
+
+    import pyarrow.dataset as ds
+
+    from level_mapreduce_spark.engine.index import _key_filter
+
+    spark.conf.set("parquet.block.size", "2048")
+    try:
+        idx = MapIndex(
+            spark, "rowgroups",
+            ExprMapper.of((F.col("k"), F.col("v")), value_type=T.LongType()),
+            store, auto_compact=False,
+        )
+        idx.build(
+            spark.range(4000).selectExpr(
+                "string(id) as doc_key", "format_string('k%05d', id) as k",
+                "id as v",
+            ),
+            assume_unique=True,
+        )
+    finally:
+        spark.conf.unset("parquet.block.size")
+    keys = ["k00123", "k03210"]
+    frags = [
+        f
+        for path in glob.glob(f"{idx.segments_path}/epoch=*/*.parquet")
+        for f in ds.dataset(path).get_fragments()
+    ]
+    groups = [g for f in frags for g in f.split_by_row_group()]
+    kept = [g for f in frags for g in f.split_by_row_group(_key_filter(keys))]
+    assert len(groups) >= 10
+    assert len(kept) == 2
+    got = idx._probe(keys)
+    assert got["index_key"].to_pylist() == keys
+    assert got["value"].to_pylist() == [123, 3210]
+    assert idx._lookup_df(keys, None).count() == 2
+
+
+@pytest.mark.parametrize(
+    "value_type",
+    [
+        T.YearMonthIntervalType(),
+        T.StructType(
+            [T.StructField("xs", T.ArrayType(T.YearMonthIntervalType()))]
+        ),
+        T.MapType(T.StringType(), T.YearMonthIntervalType()),
+    ],
+)
+def test_year_month_interval_values_refused(spark, store, value_type):
+    """A year-month interval anywhere in the value type is refused at
+    construction: such an index would build, but neither collect() nor
+    the key probe can decode its values back into Python."""
+    mapper = ExprMapper.of((F.col("k"), F.col("v")), value_type=value_type)
+    with pytest.raises(ValueError, match="YearMonthIntervalType"):
+        MapIndex(spark, "ym", mapper, store)
+    day_time = ExprMapper.of(
+        (F.col("k"), F.col("v")), value_type=T.DayTimeIntervalType()
+    )
+    MapIndex(spark, "dt", day_time, store)
 
 
 def test_update_feed_equals_stored_read_back(spark, store):

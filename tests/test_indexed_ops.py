@@ -1334,3 +1334,135 @@ def test_postings_as_of_seq_historical_serve(spark, store):
     )
     snaps = idx.snapshots()
     assert seq1 not in snaps and idx._read_seq() in snaps
+
+
+def _rows(df):
+    return [tuple(r) for r in df.collect()]
+
+
+def test_bm25_served_probe_equals_spark_fallback(spark, store, monkeypatch):
+    """A served single query has one scorer and two row sources: the
+    driver-side key probes of a local store, and one Spark collect
+    per lookup on any other store. Both answer the same rows at the
+    latest state and at every recorded seq, across overwrite,
+    insert and delete_range."""
+    from level_mapreduce_spark import MapIndex
+    from level_mapreduce_spark.operators.text import (
+        bm25_topk_from_index,
+        build_postings_index,
+    )
+
+    schema = "doc_id long, text string"
+    idx = build_postings_index(
+        spark,
+        spark.createDataFrame(
+            [
+                (0, "spark merge window spark"),
+                (1, "merge window merge"),
+                (2, "spark only here"),
+                (3, "window pane glass"),
+            ],
+            schema,
+        ),
+        store,
+        name="probe_post",
+    )
+    idx.update(
+        spark.createDataFrame(
+            [(1, "totally different now"), (4, "fresh spark window doc")],
+            schema,
+        ),
+        assume_unique=True,
+    )
+    idx.delete_range(key="L#2")
+    idx.update(
+        spark.createDataFrame([(3, "glass spark merge glass")], schema),
+        assume_unique=True,
+    )
+    seqs = [None, *idx.snapshots()]
+    assert len(seqs) == 5
+    queries = ["spark window", "merge", "glass spark pane", "absent"]
+
+    def answers():
+        return {
+            (text, seq): _rows(
+                bm25_topk_from_index(idx, text, k=4, as_of_seq=seq)
+            )
+            for text in queries
+            for seq in seqs
+        }
+
+    probed = answers()
+    monkeypatch.setattr(MapIndex, "_local_root", lambda self: None)
+    assert answers() == probed
+    assert probed[("merge", seqs[1])] != probed[("merge", None)]
+    assert all(probed[("absent", seq)] == [] for seq in seqs)
+
+
+def test_bm25_served_empty_answer(spark, store, monkeypatch):
+    """A query term absent from the corpus, or one whose only doc is
+    tombstoned, answers 0 rows with the (doc_id long, score double)
+    schema, from either row source; the term is still served at the
+    seq before its doc died."""
+    from level_mapreduce_spark import MapIndex
+    from level_mapreduce_spark.operators.text import (
+        bm25_topk_from_index,
+        build_postings_index,
+    )
+
+    idx = build_postings_index(
+        spark,
+        spark.createDataFrame(
+            [(0, "spark window"), (1, "lonely word")],
+            "doc_id long, text string",
+        ),
+        store,
+        name="empty_post",
+    )
+    seq1 = idx._read_seq()
+    idx.update(
+        spark.createDataFrame(
+            [(1, None, True)], "doc_id long, text string, deleted boolean"
+        ),
+        assume_unique=True,
+    )
+    for local in (True, False):
+        if not local:
+            monkeypatch.setattr(MapIndex, "_local_root", lambda self: None)
+        for text in ("lonely", "zzzznotaterm", "lonely zzzznotaterm"):
+            df = bm25_topk_from_index(idx, text, k=10)
+            assert df.schema.simpleString() == "struct<doc_id:bigint,score:double>"
+            assert df.collect() == [], (local, text)
+        assert [r["doc_id"] for r in bm25_topk_from_index(
+            idx, "lonely", k=10, as_of_seq=seq1
+        ).collect()] == [1]
+
+
+def test_bm25_three_term_query_equals_rescan_and_batch(spark, store, sf_dir):
+    """3-term queries, where most docs hold every term and the
+    per-doc sum has three addends: the served query is tuple-equal
+    to the corpus rescan (bm25_topk) and to the batch serve."""
+    from level_mapreduce_spark.operators.text import (
+        bm25_batch_from_index,
+        bm25_topk,
+        bm25_topk_from_index,
+        build_postings_index,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    idx = build_postings_index(spark, docs, store, name="post_3t")
+    texts = ["query window scan", "merge sort key", "line small data"]
+    batch = {}
+    for r in bm25_batch_from_index(
+        idx,
+        spark.createDataFrame(
+            list(enumerate(texts)), "query_id long, text string"
+        ),
+        k=50,
+    ).collect():
+        batch.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+    for qid, text in enumerate(texts):
+        served = _rows(bm25_topk_from_index(idx, text, k=50))
+        assert len(served) == 50
+        assert served == _rows(bm25_topk(docs, text, k=50)), text
+        assert served == sorted(batch[qid], key=lambda r: (-r[1], r[0])), text

@@ -155,31 +155,45 @@ def test_dim_join_broadcasts(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_bm25_served_pushes_query_term_keys(spark):
+def test_bm25_served_pushes_query_term_keys(spark, monkeypatch):
     """The stored-postings BM25 serve must be O(query-terms'
-    postings) END TO END (v2): the literal Ins over the query's T#
-    keys, the DF# stats keys, and the two scalar stats keys all reach
-    the Parquet scans as pushed filters — and NOTHING in the plan
-    reads the corpus-sized L# slice or aggregates a full postings
-    slice (the r14 gap: every serve paid a full L# scan for
-    N/avgdl)."""
+    postings) END TO END (v2): on the Spark path of a single query
+    (a store that is not local) the literal Ins over the query's T#
+    keys and over the DF#/DL#/N# stats keys reach the Parquet scans
+    as pushed filters — and NOTHING reads the corpus-sized L# slice
+    or aggregates a full postings slice (the r14 gap: every serve
+    paid a full L# scan for N/avgdl)."""
+    from level_mapreduce_spark import MapIndex
     from level_mapreduce_spark.operators.text import (
+        bm25_batch_from_index,
         bm25_topk_from_index,
         tfidf_from_index,
     )
 
-    from level_mapreduce_spark.operators.text import bm25_batch_from_index
-
     idx = q._postings_index(spark, SF_DIR)
-    plan = plan_of(bm25_topk_from_index(idx, q._BM25_QUERY, k=10))
-    assert "In(index_key, [T#merge,T#spark,T#window])" in plan
-    assert "In(index_key, [DF#merge,DF#spark,DF#window])" in plan
-    assert "In(index_key, [DL#,N#])" in plan
-    # no corpus-sized read anywhere in the serve plan: the L# slice
-    # is never touched (dl rides each posting; df/N/avgdl are stats
-    # point-lookups). Boundary-aware: "DL#" contains "L#".
-    assert not re.search(r"[\[,(]L#", plan), "serve plan reads L# slice"
-    assert "EvalPython" not in plan
+    lookups = []
+    lookup_df = MapIndex._lookup_df
+
+    def recorded(self, keys, hi=None):
+        lookups.append(lookup_df(self, keys, hi))
+        return lookups[-1]
+
+    with monkeypatch.context() as m:
+        m.setattr(MapIndex, "_local_root", lambda self: None)
+        m.setattr(MapIndex, "_lookup_df", recorded)
+        bm25_topk_from_index(idx, q._BM25_QUERY, k=10).collect()
+    post_plan, stats_plan = (plan_of(df) for df in lookups)
+    assert "In(index_key, [T#merge,T#spark,T#window])" in post_plan
+    assert (
+        "In(index_key, [DF#merge,DF#spark,DF#window,DL#,N#])" in stats_plan
+    )
+    # no corpus-sized read anywhere in the serve's lookups: the L#
+    # slice is never touched (dl rides each posting; df/N/avgdl are
+    # stats point-lookups). Boundary-aware: "DL#" contains "L#".
+    for plan in (post_plan, stats_plan):
+        assert not re.search(r"[\[,(]L#", plan), "serve reads L# slice"
+        assert "EvalPython" not in plan
+        assert "HashAggregate" not in plan
 
     # batch serve (small regime) keeps the stats reads IN the plan —
     # both the DF# keys and the two scalar stats rows arrive as
@@ -201,6 +215,20 @@ def test_bm25_served_pushes_query_term_keys(spark):
     assert "StringStartsWith(index_key,DF#)" in tplan
     assert not re.search(r"[\[,(]L#", tplan), "tfidf serve reads L# slice"
     assert "partial_count" not in tplan
+
+
+def test_bm25_served_runs_no_spark_job(spark):
+    """A served single BM25 query on a local store answers from the
+    driver-side key probes and returns a local relation: building and
+    collecting it starts no Spark job."""
+    from level_mapreduce_spark.operators.text import bm25_topk_from_index
+
+    idx = q._postings_index(spark, SF_DIR)
+    bm25_topk_from_index(idx, "window", k=10).collect()  # imports
+    rows, n_jobs = _jobs_during(
+        spark, lambda: bm25_topk_from_index(idx, q._BM25_QUERY, k=10).collect()
+    )
+    assert rows and n_jobs == 0, n_jobs
 
 
 def _jobs_during(spark, fn):
