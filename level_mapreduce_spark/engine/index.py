@@ -60,7 +60,6 @@ from level_mapreduce_spark.engine.mapper import (
 )
 from level_mapreduce_spark.engine.query import (
     Query,
-    _contains_map,
     _contains_type,
 )
 
@@ -225,7 +224,7 @@ def _hashable(col: str, dt: T.DataType):
     """xxhash64-safe view of a column: hashing a MapType (at any
     nesting depth) raises DATATYPE_MISMATCH.HASH_MAP_TYPE, so
     map-bearing columns are hashed through their JSON serialization."""
-    if _contains_map(dt):
+    if _contains_type(dt, T.MapType):
         return F.xxhash64(F.to_json(F.col(col)))
     return F.col(col)
 
@@ -289,13 +288,14 @@ class MapIndex:
         if mapper is not None and _contains_type(
             mapper.value_type, T.YearMonthIntervalType
         ):
-            # such an index builds, but neither collect() nor the key
-            # probe can decode its values back into Python
+            # such an index builds and reads in Spark, but its values
+            # never decode into Python: get() and collect() fail
             raise ValueError(
                 f"MapIndex {name!r}: value type "
                 f"{mapper.value_type.simpleString()} contains "
-                "YearMonthIntervalType, which cannot be read back into "
-                "Python (YearMonthIntervalType.fromInternal is not "
+                "YearMonthIntervalType, which the Python read path "
+                "(get, collect) cannot decode "
+                "(YearMonthIntervalType.fromInternal is not "
                 "implemented); store the interval as an int month count"
             )
         self.spark = spark
@@ -1728,6 +1728,16 @@ class MapIndex:
             return None
         return fs.makeQualified(hpath).toUri().getPath()
 
+    def _arrow_schema(self):
+        """Arrow schema of a key lookup's rows: the storage schema
+        without ``epoch``, in Spark's Arrow mapping (timestamps in
+        microseconds)."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return to_arrow_schema(
+            T.StructType([f for f in self._storage_schema if f.name != "epoch"])
+        )
+
     def _probe(self, keys: list[str], hi: int | None = None):
         """Driver-side key probe: the live rows under the literal
         ``keys`` as an Arrow table ``(index_key, emit_pos, value,
@@ -1751,7 +1761,6 @@ class MapIndex:
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.dataset as ds
-        from pyspark.sql.pandas.types import to_arrow_schema
 
         epochs, fold_max = self._view()
         seg_root = posixpath.join(root, _SEGMENTS)
@@ -1760,9 +1769,7 @@ class MapIndex:
             dirs.append((posixpath.join(seg_root, ".fold_tmp"), fold_max))
         if hi is not None:
             dirs = [(d, e) for d, e in dirs if e <= hi]
-        schema = to_arrow_schema(
-            T.StructType([f for f in self._storage_schema if f.name != "epoch"])
-        )
+        schema = self._arrow_schema()
         # Spark writes timestamps as INT96: read them at Spark's
         # microsecond unit (nanoseconds overflow outside 1677-2262);
         # the cast below lines them and the nullability up with what
@@ -1827,7 +1834,14 @@ class MapIndex:
         families' point lookups."""
         rows = self._probe(keys, hi)
         if rows is None:
-            rows = self._lookup_df(keys, hi).toArrow().sort_by(_PROBE_ORDER)
+            schema = self._arrow_schema()
+            rows = (
+                self._lookup_df(keys, hi)
+                .toArrow()
+                .select(schema.names)
+                .cast(schema)
+                .sort_by(_PROBE_ORDER)
+            )
         return rows
 
     def _lookup_df(self, keys: list[str], hi: int | None = None) -> DataFrame:
@@ -1927,16 +1941,15 @@ class MapIndex:
         point-lookup API, not a bulk path (:meth:`get_df` is the
         DataFrame form).
 
-        A local store answers from the driver-side key probe
-        (:meth:`_probe`) with no Spark job; values decode exactly as
-        ``collect()`` does them (struct -> Row, map -> dict). Other
-        stores, or a probe that lost a race with a fold commit,
-        collect :meth:`get_df`.
+        Reads through :meth:`_lookup`: a local store answers from the
+        driver-side key probe with no Spark job, other stores (or a
+        probe that lost a race with a fold commit) with one Spark
+        collect. Values decode exactly as ``collect()`` does them
+        (struct -> Row, map -> dict).
         """
-        rows = self._probe([key])
-        if rows is None:
-            return [r["value"] for r in self.get_df(key).collect()]
         from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+        rows = self._lookup([key])
 
         return [
             v

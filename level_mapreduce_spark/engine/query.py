@@ -51,13 +51,6 @@ def _contains_type(dt: T.DataType, cls: type) -> bool:
     return False
 
 
-def _contains_map(dt: T.DataType) -> bool:
-    """True when ``dt`` contains a MapType at any nesting depth (maps
-    are unorderable: default-comparator array_sort / xxhash64 over
-    them fail analysis)."""
-    return _contains_type(dt, T.MapType)
-
-
 class Query:
     """Fluent, lazy pipeline over an index scan.
 
@@ -367,7 +360,7 @@ class Query:
                 struct_order_cmp(*order_cols),
             )
             results = F.transform(collected, lambda s: s[vcol])
-        elif _contains_map(df.schema[vcol].dataType):
+        elif _contains_type(df.schema[vcol].dataType, T.MapType):
             # No order columns AND a map-bearing value type: the
             # default array_sort comparator fails analysis on MapType
             # (INVALID_ORDERING_TYPE — maps are unorderable, so no

@@ -1337,6 +1337,18 @@ def _bm25_topk_rows(
     return ranked[:k]
 
 
+# The served single query's regime threshold: the query's total
+# postings (the sum of its terms' df) above which it is scored on the
+# executors instead of the driver. MEASURED crossover:
+# scripts/bm25_serve_regime_probe.py (262144 docs, local[4]) times
+# the driver regime at ~10 us and ~340 B of Python heap per posting
+# (131072: 1.08 s, 45 MB) against a 0.9-1.7 s executor regime that
+# returns only k rows (131072: 1.23 s; 262144: 1.67 vs 1.93 s
+# driver). More executor cores lower the crossover, so this is a
+# ceiling on the driver's time and memory per query, not an optimum.
+_BM25_SERVE_POSTINGS_MAX = 1 << 17
+
+
 def bm25_topk_from_index(
     idx,
     query: str,
@@ -1344,19 +1356,32 @@ def bm25_topk_from_index(
     k1: float = 1.2,
     b: float = 0.75,
     as_of_seq: int | None = None,
+    postings_max: int = _BM25_SERVE_POSTINGS_MAX,
 ) -> DataFrame:
     """Serve :func:`bm25_topk` from a stored postings index,
     O(query-terms' postings) END TO END (v2): the query is
-    2 + 2·|terms| exact-key lookups — its ``T#<term>`` postings (dl
-    rides each posting) and the ``N#``/``DL#``/``DF#<term>`` stats
-    rows — NO L#-slice scan and NO corpus aggregate. Both lookups go
-    through :meth:`MapIndex._lookup`: on a local store the
-    driver-side key probe, so a served query starts no Spark job;
-    elsewhere (or when a probe loses a race with a fold commit) one
-    bounded Spark collect each. The rows are scored on the driver
-    (:func:`_bm25_topk_rows`) and returned as a local frame
-    ``(doc_id long, score double)``; equality with the rescan
-    operator and the batch serve is tested, tuple for tuple.
+    2 + 2·|terms| exact-key lookups — the ``N#``/``DL#``/``DF#<term>``
+    stats rows and its ``T#<term>`` postings (dl rides each posting)
+    — NO L#-slice scan and NO corpus aggregate.
+
+    The stats rows come first (:func:`_stats_lookup`), and their df
+    values sum to the query's posting count, which picks the regime:
+
+    - at most ``postings_max`` postings: the ``T#`` rows are fetched
+      through :meth:`MapIndex._lookup` and scored on the driver
+      (:func:`_bm25_topk_rows`), returned as a local frame. On a
+      local store both lookups are the driver-side key probe, so the
+      query starts no Spark job; elsewhere (or when a probe loses a
+      race with a fold commit) each is one bounded Spark collect.
+    - above it (a common term on a large corpus): the query is
+      scored on the executors by :func:`bm25_batch_from_index` over a
+      one-row query frame, which sends only the top ``k`` rows to the
+      driver.
+
+    Both regimes return ``(doc_id long, score double)`` ordered by
+    ``(score DESC, doc_id)``; their equality with each other, with
+    the rescan operator and with the batch serve is tested, tuple for
+    tuple.
 
     ``as_of_seq`` serves a recorded historical snapshot (postings +
     stats epoch-bounded to the consistent pair stamped at that seq,
@@ -1370,8 +1395,17 @@ def bm25_topk_from_index(
     p_e = s_e = None
     if as_of_seq is not None:
         p_e, s_e = _resolve_seq(idx, as_of_seq)
-    post = idx._lookup([f"T#{t}" for t in q_terms], p_e)
     n_docs, sum_dl, dfs = _stats_lookup(idx, q_terms, as_of_epoch=s_e)
+    if sum(dfs.values()) > postings_max:
+        one = idx.spark.createDataFrame(
+            [(0, " ".join(q_terms))], "query_id long, text string"
+        )
+        return (
+            bm25_batch_from_index(idx, one, k, k1, b, as_of_seq=as_of_seq)
+            .select("doc_id", "score")
+            .orderBy(F.col("score").desc(), "doc_id")
+        )
+    post = idx._lookup([f"T#{t}" for t in q_terms], p_e)
     top = _bm25_topk_rows(post, n_docs, sum_dl, dfs, k, k1, b)
     # an Arrow table becomes a local relation (its collect() starts no
     # job) even when empty; an empty pandas frame would be parallelized

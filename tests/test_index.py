@@ -619,10 +619,11 @@ def test_get_probe_timestamps_in_local_zone(spark, store, monkeypatch):
         time.tzset()
 
 
-@pytest.mark.parametrize("kind", ["nested", "timestamp"])
+@pytest.mark.parametrize("kind", sorted(_PROBE_TYPES))
 def test_get_spark_fallback_equals_probe(spark, store, monkeypatch, kind):
     """A store that does not resolve to the local filesystem answers
-    get()/count(key) from the Spark path, with the probe's answers."""
+    get()/count(key) from the Spark path (_lookup's Arrow collect),
+    with the probe's answers, for every value type."""
     idx = _probe_index(spark, store, kind)
     probed = {key: (idx.get(key), idx.count(key)) for key in _PROBE_KEYS}
     monkeypatch.setattr(MapIndex, "_local_root", lambda self: None)
@@ -690,8 +691,8 @@ def test_key_list_probe_prunes_row_groups(spark, store):
 )
 def test_year_month_interval_values_refused(spark, store, value_type):
     """A year-month interval anywhere in the value type is refused at
-    construction: such an index would build, but neither collect() nor
-    the key probe can decode its values back into Python."""
+    construction: such an index would build, but the Python read path
+    (get, collect) cannot decode its values."""
     mapper = ExprMapper.of((F.col("k"), F.col("v")), value_type=value_type)
     with pytest.raises(ValueError, match="YearMonthIntervalType"):
         MapIndex(spark, "ym", mapper, store)

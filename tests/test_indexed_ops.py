@@ -1341,11 +1341,12 @@ def _rows(df):
 
 
 def test_bm25_served_probe_equals_spark_fallback(spark, store, monkeypatch):
-    """A served single query has one scorer and two row sources: the
-    driver-side key probes of a local store, and one Spark collect
-    per lookup on any other store. Both answer the same rows at the
-    latest state and at every recorded seq, across overwrite,
-    insert and delete_range."""
+    """A served single query within the driver bound has one scorer
+    and two row sources: the driver-side key probes of a local store,
+    and one Spark collect per lookup on any other store. Both answer
+    the same rows as the executor regime (postings_max=-1) at the
+    latest state and at every recorded seq, across overwrite, insert
+    and delete_range."""
     from level_mapreduce_spark import MapIndex
     from level_mapreduce_spark.operators.text import (
         bm25_topk_from_index,
@@ -1383,20 +1384,63 @@ def test_bm25_served_probe_equals_spark_fallback(spark, store, monkeypatch):
     assert len(seqs) == 5
     queries = ["spark window", "merge", "glass spark pane", "absent"]
 
-    def answers():
+    def answers(**kw):
         return {
             (text, seq): _rows(
-                bm25_topk_from_index(idx, text, k=4, as_of_seq=seq)
+                bm25_topk_from_index(idx, text, k=4, as_of_seq=seq, **kw)
             )
             for text in queries
             for seq in seqs
         }
 
     probed = answers()
+    assert answers(postings_max=-1) == probed
     monkeypatch.setattr(MapIndex, "_local_root", lambda self: None)
     assert answers() == probed
     assert probed[("merge", seqs[1])] != probed[("merge", None)]
     assert all(probed[("absent", seq)] == [] for seq in seqs)
+
+
+def test_bm25_served_wide_query_scored_on_executors(spark, store, monkeypatch):
+    """A query whose terms hold more postings than ``postings_max``
+    never fetches its T# rows to the driver: it is scored on the
+    executors (Spark jobs run) and returns the driver regime's rows;
+    at exactly the bound it stays on the driver."""
+    from level_mapreduce_spark import MapIndex
+    from level_mapreduce_spark.operators.text import (
+        bm25_topk_from_index,
+        build_postings_index,
+    )
+
+    idx = build_postings_index(
+        spark,
+        spark.createDataFrame(
+            [(0, "spark merge spark"), (1, "spark window"),
+             (2, "merge window glass"), (3, "spark")],
+            "doc_id long, text string",
+        ),
+        store,
+        name="wide_post",
+    )
+    looked_up = []
+    lookup = MapIndex._lookup
+
+    def recording(self, keys, hi=None):
+        looked_up.extend(keys)
+        return lookup(self, keys, hi)
+
+    monkeypatch.setattr(MapIndex, "_lookup", recording)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    # spark: df 3, merge: df 2 -> 5 postings
+    narrow = _rows(bm25_topk_from_index(idx, "spark merge", k=3, postings_max=5))
+    assert "T#spark" in looked_up
+    assert set(tracker.getJobIdsForGroup()) == before
+    looked_up.clear()
+    wide = _rows(bm25_topk_from_index(idx, "spark merge", k=3, postings_max=4))
+    assert set(tracker.getJobIdsForGroup()) - before
+    assert not [k for k in looked_up if k.startswith("T#")]
+    assert wide == narrow and len(wide) == 3
 
 
 def test_bm25_served_empty_answer(spark, store, monkeypatch):
