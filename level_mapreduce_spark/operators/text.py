@@ -1356,7 +1356,6 @@ def bm25_topk_from_index(
     k1: float = 1.2,
     b: float = 0.75,
     as_of_seq: int | None = None,
-    postings_max: int = _BM25_SERVE_POSTINGS_MAX,
 ) -> DataFrame:
     """Serve :func:`bm25_topk` from a stored postings index,
     O(query-terms' postings) END TO END (v2): the query is
@@ -1367,7 +1366,7 @@ def bm25_topk_from_index(
     The stats rows come first (:func:`_stats_lookup`), and their df
     values sum to the query's posting count, which picks the regime:
 
-    - at most ``postings_max`` postings: the ``T#`` rows are fetched
+    - at most ``_BM25_SERVE_POSTINGS_MAX`` postings: the ``T#`` rows are fetched
       through :meth:`MapIndex._lookup` and scored on the driver
       (:func:`_bm25_topk_rows`), returned as a local frame. On a
       local store both lookups are the driver-side key probe, so the
@@ -1396,7 +1395,7 @@ def bm25_topk_from_index(
     if as_of_seq is not None:
         p_e, s_e = _resolve_seq(idx, as_of_seq)
     n_docs, sum_dl, dfs = _stats_lookup(idx, q_terms, as_of_epoch=s_e)
-    if sum(dfs.values()) > postings_max:
+    if sum(dfs.values()) > _BM25_SERVE_POSTINGS_MAX:
         one = idx.spark.createDataFrame(
             [(0, " ".join(q_terms))], "query_id long, text string"
         )

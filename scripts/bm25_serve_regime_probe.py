@@ -1,9 +1,9 @@
 """bm25_topk_from_index regime crossover probe.
 
-A served single BM25 query has two regimes around ``postings_max``
-(operators/text.py): at or below, the query's ``T#`` postings are
-fetched to the driver (the key probe on a local store) and scored in
-Python; above, the query is scored on the executors by the batch
+A served single BM25 query has two regimes around
+``_BM25_SERVE_POSTINGS_MAX`` (operators/text.py): at or below, the
+query's ``T#`` postings are fetched to the driver (the key probe on a
+local store) and scored in Python; above, the query is scored on the executors by the batch
 serve over a one-row query frame and only the top k rows reach the
 driver. Results are identical either side. The driver regime costs
 time and memory linear in the query's total postings (the sum of its
@@ -14,7 +14,7 @@ default threshold is a measured choice.
 Method: a synthetic corpus of ``n_docs`` docs where term ``t<j>``
 occurs in every ``2**j``-th doc (df = n_docs / 2**j), so one corpus
 holds one-term queries of every power-of-two posting count. For each
-term, time the serve with each regime FORCED (``postings_max`` huge
+term, time the serve with each regime FORCED (the bound set huge
 -> driver; -1 -> executors), min of 3 ``collect()`` calls, and the
 driver regime's peak Python heap (tracemalloc, a separate call).
 Prints one JSON line per term and a summary with the crossover.
@@ -57,6 +57,7 @@ def main() -> None:
     spark = get_spark(app_name="bm25-serve-regime-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
+    from level_mapreduce_spark.operators import text
     from level_mapreduce_spark.operators.text import (
         bm25_topk_from_index,
         build_postings_index,
@@ -84,9 +85,8 @@ def main() -> None:
             term = f"t{j}"
 
             def serve(cap):
-                return bm25_topk_from_index(
-                    idx, term, k=10, postings_max=cap
-                ).collect()
+                text._BM25_SERVE_POSTINGS_MAX = cap
+                return bm25_topk_from_index(idx, term, k=10).collect()
 
             assert serve(1 << 62) == serve(-1), term
             tracemalloc.start()

@@ -1344,10 +1344,11 @@ def test_bm25_served_probe_equals_spark_fallback(spark, store, monkeypatch):
     """A served single query within the driver bound has one scorer
     and two row sources: the driver-side key probes of a local store,
     and one Spark collect per lookup on any other store. Both answer
-    the same rows as the executor regime (postings_max=-1) at the
-    latest state and at every recorded seq, across overwrite, insert
-    and delete_range."""
+    the same rows as the executor regime (a driver bound of -1) at
+    the latest state and at every recorded seq, across overwrite,
+    insert and delete_range."""
     from level_mapreduce_spark import MapIndex
+    from level_mapreduce_spark.operators import text as tx
     from level_mapreduce_spark.operators.text import (
         bm25_topk_from_index,
         build_postings_index,
@@ -1384,17 +1385,17 @@ def test_bm25_served_probe_equals_spark_fallback(spark, store, monkeypatch):
     assert len(seqs) == 5
     queries = ["spark window", "merge", "glass spark pane", "absent"]
 
-    def answers(**kw):
+    def answers():
         return {
-            (text, seq): _rows(
-                bm25_topk_from_index(idx, text, k=4, as_of_seq=seq, **kw)
-            )
-            for text in queries
+            (q, seq): _rows(bm25_topk_from_index(idx, q, k=4, as_of_seq=seq))
+            for q in queries
             for seq in seqs
         }
 
     probed = answers()
-    assert answers(postings_max=-1) == probed
+    with monkeypatch.context() as m:
+        m.setattr(tx, "_BM25_SERVE_POSTINGS_MAX", -1)
+        assert answers() == probed
     monkeypatch.setattr(MapIndex, "_local_root", lambda self: None)
     assert answers() == probed
     assert probed[("merge", seqs[1])] != probed[("merge", None)]
@@ -1402,11 +1403,12 @@ def test_bm25_served_probe_equals_spark_fallback(spark, store, monkeypatch):
 
 
 def test_bm25_served_wide_query_scored_on_executors(spark, store, monkeypatch):
-    """A query whose terms hold more postings than ``postings_max``
+    """A query whose terms hold more postings than the driver bound
     never fetches its T# rows to the driver: it is scored on the
     executors (Spark jobs run) and returns the driver regime's rows;
     at exactly the bound it stays on the driver."""
     from level_mapreduce_spark import MapIndex
+    from level_mapreduce_spark.operators import text as tx
     from level_mapreduce_spark.operators.text import (
         bm25_topk_from_index,
         build_postings_index,
@@ -1433,11 +1435,13 @@ def test_bm25_served_wide_query_scored_on_executors(spark, store, monkeypatch):
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup())
     # spark: df 3, merge: df 2 -> 5 postings
-    narrow = _rows(bm25_topk_from_index(idx, "spark merge", k=3, postings_max=5))
+    monkeypatch.setattr(tx, "_BM25_SERVE_POSTINGS_MAX", 5)
+    narrow = _rows(bm25_topk_from_index(idx, "spark merge", k=3))
     assert "T#spark" in looked_up
     assert set(tracker.getJobIdsForGroup()) == before
     looked_up.clear()
-    wide = _rows(bm25_topk_from_index(idx, "spark merge", k=3, postings_max=4))
+    monkeypatch.setattr(tx, "_BM25_SERVE_POSTINGS_MAX", 4)
+    wide = _rows(bm25_topk_from_index(idx, "spark merge", k=3))
     assert set(tracker.getJobIdsForGroup()) - before
     assert not [k for k in looked_up if k.startswith("T#")]
     assert wide == narrow and len(wide) == 3
