@@ -1189,7 +1189,8 @@ def q_bm25_topk(spark, sf_dir):
     rescans the corpus; `served` answers from the STORED postings
     index — key lookups of the query's T# postings and its
     N#/DL#/DF# stats rows (O(query-terms' postings), never the
-    corpus), scored on the driver. The oracle computes the ranking
+    corpus), scored on the driver, or on the executors for a query
+    above the driver's postings bound. The oracle computes the ranking
     once and emits it under both labels."""
     docs = _docs(spark, sf_dir)
     batch = tx.bm25_topk(docs, _BM25_QUERY, k=10).select(
