@@ -1950,7 +1950,6 @@ class MapIndex:
         from pyspark.sql.conversion import ArrowTableToRowsConversion
 
         rows = self._lookup([key])
-
         return [
             v
             for (v,) in ArrowTableToRowsConversion.convert(

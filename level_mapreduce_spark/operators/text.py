@@ -1366,9 +1366,9 @@ def bm25_topk_from_index(
     The stats rows come first (:func:`_stats_lookup`), and their df
     values sum to the query's posting count, which picks the regime:
 
-    - at most ``_BM25_SERVE_POSTINGS_MAX`` postings: the ``T#`` rows are fetched
-      through :meth:`MapIndex._lookup` and scored on the driver
-      (:func:`_bm25_topk_rows`), returned as a local frame. On a
+    - at most ``_BM25_SERVE_POSTINGS_MAX`` postings: the ``T#`` rows
+      are fetched through :meth:`MapIndex._lookup` and scored on the
+      driver (:func:`_bm25_topk_rows`), returned as a local frame. On a
       local store both lookups are the driver-side key probe, so the
       query starts no Spark job; elsewhere (or when a probe loses a
       race with a fold commit) each is one bounded Spark collect.

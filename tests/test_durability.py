@@ -820,7 +820,7 @@ def test_probe_file_vanished_falls_back_to_spark(spark, store, monkeypatch):
 
     idx, _ = _churned_index(spark, store, "probe_vanish")
     want = _point_reads(idx)
-    real_dataset, real_scan = ds.dataset, idx.scan
+    real_dataset, real_scan, real_lookup_df = ds.dataset, idx.scan, idx._lookup_df
     vanished, scans = [], []
 
     def dataset_vanishing_once(*a, **k):
@@ -833,10 +833,15 @@ def test_probe_file_vanished_falls_back_to_spark(spark, store, monkeypatch):
         scans.append(k)
         return real_scan(*a, **k)
 
+    def spy_lookup_df(keys, hi=None):
+        scans.append(keys)
+        return real_lookup_df(keys, hi)
+
     monkeypatch.setattr(ds, "dataset", dataset_vanishing_once)
     monkeypatch.setattr(idx, "scan", spy_scan)
+    monkeypatch.setattr(idx, "_lookup_df", spy_lookup_df)
     assert idx.get("z") == want["z"][0]
-    assert len(vanished) == 1 and scans == [{"key": "z"}]
+    assert len(vanished) == 1 and scans == [["z"]]
     assert _point_reads(idx) == want
     assert len(scans) == 1
 

@@ -182,7 +182,7 @@ def test_bm25_served_pushes_query_term_keys(spark, monkeypatch):
         m.setattr(MapIndex, "_local_root", lambda self: None)
         m.setattr(MapIndex, "_lookup_df", recorded)
         bm25_topk_from_index(idx, q._BM25_QUERY, k=10).collect()
-    post_plan, stats_plan = (plan_of(df) for df in lookups)
+    stats_plan, post_plan = (plan_of(df) for df in lookups)
     assert "In(index_key, [T#merge,T#spark,T#window])" in post_plan
     assert (
         "In(index_key, [DF#merge,DF#spark,DF#window,DL#,N#])" in stats_plan
