@@ -1728,16 +1728,6 @@ class MapIndex:
             return None
         return fs.makeQualified(hpath).toUri().getPath()
 
-    def _arrow_schema(self):
-        """Arrow schema of a key lookup's rows: the storage schema
-        without ``epoch``, in Spark's Arrow mapping (timestamps in
-        microseconds)."""
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        return to_arrow_schema(
-            T.StructType([f for f in self._storage_schema if f.name != "epoch"])
-        )
-
     def _probe(self, keys: list[str], hi: int | None = None):
         """Driver-side key probe: the live rows under the literal
         ``keys`` as an Arrow table ``(index_key, emit_pos, value,
@@ -1761,6 +1751,7 @@ class MapIndex:
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         epochs, fold_max = self._view()
         seg_root = posixpath.join(root, _SEGMENTS)
@@ -1769,7 +1760,9 @@ class MapIndex:
             dirs.append((posixpath.join(seg_root, ".fold_tmp"), fold_max))
         if hi is not None:
             dirs = [(d, e) for d, e in dirs if e <= hi]
-        schema = self._arrow_schema()
+        schema = to_arrow_schema(
+            T.StructType([f for f in self._storage_schema if f.name != "epoch"])
+        )
         # Spark writes timestamps as INT96: read them at Spark's
         # microsecond unit (nanoseconds overflow outside 1677-2262);
         # the cast below lines them and the nullability up with what
@@ -1834,14 +1827,7 @@ class MapIndex:
         families' point lookups."""
         rows = self._probe(keys, hi)
         if rows is None:
-            schema = self._arrow_schema()
-            rows = (
-                self._lookup_df(keys, hi)
-                .toArrow()
-                .select(schema.names)
-                .cast(schema)
-                .sort_by(_PROBE_ORDER)
-            )
+            rows = self._lookup_df(keys, hi).toArrow().sort_by(_PROBE_ORDER)
         return rows
 
     def _lookup_df(self, keys: list[str], hi: int | None = None) -> DataFrame:

@@ -602,8 +602,9 @@ def test_get_probe_equals_spark(spark, store, kind):
 
 
 def test_get_probe_timestamps_in_local_zone(spark, store, monkeypatch):
-    """Probed timestamps decode to the driver's local wall-clock time,
-    as collect() does, whatever the process time zone."""
+    """Timestamps from get() decode to the driver's local wall-clock
+    time, as collect() does, whatever the process time zone — from
+    the probe and from the Spark fallback's Arrow collect."""
     import time
 
     idx = _probe_index(spark, store, "timestamp")
@@ -611,9 +612,11 @@ def test_get_probe_timestamps_in_local_zone(spark, store, monkeypatch):
         for tz in ("UTC", "America/New_York"):
             monkeypatch.setenv("TZ", tz)
             time.tzset()
-            assert {key: idx.get(key) for key in _PROBE_KEYS} == {
-                key: got for key, (got, _) in _spark_answers(idx).items()
-            }
+            want = {key: got for key, (got, _) in _spark_answers(idx).items()}
+            assert {key: idx.get(key) for key in _PROBE_KEYS} == want
+            with monkeypatch.context() as m:
+                m.setattr(MapIndex, "_local_root", lambda self: None)
+                assert {key: idx.get(key) for key in _PROBE_KEYS} == want
     finally:
         monkeypatch.undo()
         time.tzset()
